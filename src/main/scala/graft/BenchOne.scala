@@ -1,21 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val runs = sys.env.get("SPARK_GRAFT_BENCHONE_RUNS").fold(2) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse {
+        System.err.println(
+          s"SPARK_GRAFT_BENCHONE_RUNS must be a positive integer, got '$v'")
+        sys.exit(2)
+      }
+    }
+    // graft.Bench's session, so a single query times as it does there
+    val spark = LocalSession.create()
     val byName = SparkEntry.specs.map(sp => sp.name -> sp).toMap
     // Passes are INTERLEAVED across the requested queries (the
     // graft.Bench protocol): a host-steal burst then inflates one pass
     // of each query instead of every run of whichever query it hit, so
     // the per-query min stays clean on a contended box.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCHONE_RUNS", "2").toInt
     val times = (1 to runs).map { i =>
       args.map { name =>
         val t0 = System.nanoTime()

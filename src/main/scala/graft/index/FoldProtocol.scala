@@ -485,11 +485,10 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
   }
 
   /** Floor-bounded vacuum, kind-generic (the shared kernel of
-    * `TimeTravel.vacuum`, `Retrieval.vacuumBm25Index`,
-    * `Retrieval.vacuumSubstringIndex` and
-    * `Similarity.vacuumIvfIndex`): collapse every sub-root with
-    * ledger id ≤ `floor` into ONE `c<floor>` dir per side — each
-    * side's `stage` callback writes the index's own resolved
+    * `TimeTravel.vacuum`, `Retrieval.PostingsKind.vacuum` (every
+    * postings kind) and `Similarity.vacuumIvfIndex`): collapse every
+    * sub-root with ledger id ≤ `floor` into ONE `c<floor>` dir per
+    * side — each side's `stage` callback writes the index's own resolved
     * as-of-floor content into a dot-staging dir, and ONE atomic
     * rename lands it (THE commit point: the compaction-supersedes
     * rule in [[committedDirsOrEmpty]] hides the collapsed sources the

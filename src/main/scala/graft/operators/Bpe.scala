@@ -173,7 +173,7 @@ object Bpe {
 
   /** Build-if-absent the persisted model for `d` (suffix-keyed
     * warehouse convention, same completeness contract as
-    * `Retrieval.ensureBm25Index`): `merges/` (rank, pair, merged),
+    * `Retrieval.PostingsKind.ensure`): `merges/` (rank, pair, merged),
     * `vocab/` (word, freq, n_bpe) and `curve/` (rank, total_tokens)
     * parquet dirs; complete iff all carry `_SUCCESS`. The learn is
     * deterministic, so a completed model re-serves without

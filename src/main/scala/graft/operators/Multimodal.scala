@@ -898,7 +898,7 @@ object Multimodal {
       s.conf.get("spark.sql.warehouse.dir"),
       s"graft_phash_merged$suffix").toString
     // Completeness = the fold ledger AND a complete primary-copy seed
-    // (the ensureMergedBm25Index / ensureMergedIvfIndex pattern): a
+    // (the `Retrieval.Scenario.Merged` / ensureMergedIvfIndex pattern): a
     // root whose phashes/seed dir was damaged but whose ledger
     // survived must rebuild, not re-serve partial data.
     Layout.ensurePublishedDir(s, merged)(r =>

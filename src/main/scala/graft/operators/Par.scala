@@ -30,22 +30,36 @@ object Par {
     * even though the horizons are independent — guide §2.6, actions are
     * only sequential because the driver calls them sequentially. The
     * returned frames are then combined (union) and executed as one
-    * query exactly as before; only the construction overlaps. Failures
-    * propagate like the sequential form (first exception rethrown).
+    * query exactly as before; only the construction overlaps. The
+    * first failure is rethrown as soon as it happens and stops the
+    * siblings: an item not yet started never starts (its Spark jobs
+    * would be thrown away), and the ones running are cancelled and
+    * interrupted.
     */
   def buildAll[A, B](items: Seq[A], parallelism: Int = 4)(f: A => B): Seq[B] = {
     if (items.size <= 1) return items.map(f)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(parallelism, items.size))
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val done = new java.util.concurrent.ExecutorCompletionService[B](pool)
     try {
-      val futures = items.map(a => pool.submit(
-        new java.util.concurrent.Callable[B] { def call(): B = f(a) }))
-      futures.map { fut =>
-        try fut.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
+      val futures = items.map(a => done.submit(
+        new java.util.concurrent.Callable[B] {
+          // after a failure the results are thrown away: skip the work
+          def call(): B =
+            if (failed.get()) null.asInstanceOf[B]
+            else
+              try f(a)
+              catch { case e: Throwable => failed.set(true); throw e }
+        }))
+      // completion order, so a failure is seen while siblings still run
+      try items.foreach(_ => done.take().get())
+      catch { case e: java.util.concurrent.ExecutionException =>
+        futures.foreach(_.cancel(true))
+        throw e.getCause
       }
-    } finally pool.shutdown()
+      futures.map(_.get())
+    } finally pool.shutdownNow()
   }
 
   // The narrow/wide verdict is pure function of (file set, parallelism,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Ranked text retrieval over the `documents` corpus: Okapi BM25
@@ -138,287 +138,387 @@ object Retrieval {
     scorePostings(postings, stats)
   }
 
-  // ---- persisted inverted index ----
-  //   <root>/postings/<sub>/ — (word, doc_id, tf, dl) partitioned by
-  //                      `bucket=pmod(xxhash64(word), Buckets)`; dl is
-  //                      denormalized onto each posting (8 bytes/row)
-  //                      so serving never joins a doc-length table.
-  //   <root>/stats/<sub>/ — ONE row (n, sum_dl) per sub-root: the
-  //                      MERGEABLE form of the corpus stats (avgdl is
-  //                      derived at serve time as Σsum_dl / Σn — exact
-  //                      integer sums, so growth cannot drift the
-  //                      average).
-  // Sub-roots `<sub>` are `seed/` (writeBm25Index), `b<batchId>/` (one
-  // per folded append) and `compact/` (compactBm25Index); the set of
-  // VALID b-dirs is the ledger at `<root>/_postings_ledger`, replaced
-  // atomically AFTER a batch's postings + stats dirs are fully written
-  // — the same exactly-once fold protocol as the dedup and IVF
-  // indexes. The full vocabulary is indexed (the index serves ANY term
-  // set, not just the gate's); ALL postings of a word land in the same
-  // `bucket=` value of every sub-root, so the static bucket prune
-  // pushes into every union branch.
-
-  private val PostingsSchema =
-    "word STRING, doc_id BIGINT, tf BIGINT, dl INT, bucket BIGINT"
-  private val StatsSchema = "n BIGINT, sum_dl BIGINT"
+  // ---- persisted postings indexes ----
+  // Four index kinds — BM25 inverted, positional phrase, character
+  // trigram and word-positional (NEAR) — share ONE on-disk dialect and
+  // ONE lifecycle, so each kind is a [[PostingsKind]] value and every
+  // verb is defined once:
+  //   <root>/postings/<sub>/ — the kind's posting rows partitioned by
+  //                      `bucket=pmod(xxhash64(<key>), Buckets)`: ALL
+  //                      postings of a key land in the same `bucket=`
+  //                      value of every sub-root, so the static bucket
+  //                      prune pushes into every union branch.
+  //   <root>/stats/<sub>/ — BM25 only: ONE row (n, sum_dl) per
+  //                      sub-root, the MERGEABLE form of the corpus
+  //                      stats (avgdl is derived at serve time as
+  //                      Σsum_dl / Σn — exact integer sums, so growth
+  //                      cannot drift the average).
+  // Sub-roots `<sub>` are `seed/` (write), `b<batchId>/` (one per
+  // folded append) and `c<hw>/` (compact, vacuum); the set of VALID
+  // b-dirs is the ledger at `<root>/_postings_ledger`, replaced
+  // atomically AFTER a batch's dirs are fully written — the same
+  // exactly-once fold protocol as the dedup and IVF indexes. Deletes
+  // are ledgered `doc_id` tombstones every read anti-joins. The full
+  // vocabulary is indexed (an index serves ANY key set, not just the
+  // gate's).
 
   /** The index's staged-commit machinery — ledger, committed-dir
     * resolution, tombstones, publishes (see
-    * [[graft.index.FoldProtocol]]).
+    * [[graft.index.FoldProtocol]]) — shared by every postings kind.
     */
   private[graft] def protocol(path: String) =
     new graft.index.FoldProtocol(path, "_postings_ledger")
 
-  /** Write one sub-root's postings + mergeable stats from a
-    * `documents`-shaped frame. One tokenize scan per output;
-    * [[bucketSliced]] clusters the rows bucket-first before the
-    * partitioned write (without any clustering every task writes a
-    * sliver of every bucket) while keeping the write fan-out at the
-    * session's shuffle parallelism. Overwrite semantics ⇒ a replayed
-    * fold rewrites the same dirs wholesale.
+  private val StatsSchema = "n BIGINT, sum_dl BIGINT"
+
+  /** One postings index kind as data; the lifecycle below is derived
+    * from these fields alone.
+    *
+    * @param name     the kind's sub-dir under a takedown-sweep root
+    * @param prefix   gate fixture root prefix (`graft_<kind>`)
+    * @param lease    writer-lease owner of its compaction
+    * @param schema   postings read schema (`bucket` included)
+    * @param key      the posting column the bucket hashes
+    * @param build    documents → posting rows (one tokenize scan)
+    * @param hasStats whether the kind carries the mergeable
+    *                 `(n, sum_dl)` stats side
     */
-  private def writeSubRoot(docs: DataFrame, path: String,
-      sub: String): Unit = {
-    val p = protocol(path)
-    bucketSliced(Par.fanOut(docs)
+  private[graft] final class PostingsKind(val name: String, prefix: String,
+      lease: String, schema: String, key: String,
+      build: DataFrame => DataFrame, hasStats: Boolean) {
+
+    /** The kind-relative dirs every sub-root has one of. */
+    val sides: Seq[String] =
+      if (hasStats) Seq("postings", "stats") else Seq("postings")
+
+    /** Write one side's frame: postings bucket-partitioned through
+      * [[bucketSliced]] (clustered bucket-first — without it every task
+      * writes a sliver of every bucket — at the session's write
+      * fan-out), stats as-is. Overwrite semantics ⇒ a replayed stage
+      * rewrites the same dirs wholesale.
+      */
+    private def writeSide(side: String, df: DataFrame, to: String): Unit =
+      if (side == "postings")
+        bucketSliced(df).write.mode(SaveMode.Overwrite)
+          .partitionBy("bucket").parquet(to)
+      else df.write.mode(SaveMode.Overwrite).parquet(to)
+
+    private def writeSides(content: String => DataFrame)(
+        to: String => String): Unit =
+      sides.foreach(side => writeSide(side, content(side), to(side)))
+
+    /** Write sub-root `sub` of every side from a `documents`-shaped
+      * frame (one tokenize scan per side). Exposed to the specs so a
+      * crash between a fold's writes and its ledger commit can be
+      * simulated: an uncommitted b-dir is invisible to readers.
+      */
+    private[graft] def stage(docs: DataFrame, path: String,
+        sub: String): Unit = {
+      val p = protocol(path)
+      writeSides {
+        case "postings" => build(docs)
+          .withColumn("bucket", pmod(xxhash64(col(key)), lit(Buckets)))
+        case _ => docs.select(size(words(col("text"))).as("dl"))
+          .agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("sum_dl"))
+      }(side => s"${p.dir(side)}/$sub")
+    }
+
+    /** The served content of `side`, optionally AS OF a ledger horizon
+      * (sub-roots and tombstones above it are invisible).
+      */
+    private def served(s: SparkSession, path: String,
+        asOf: Option[Long])(side: String): DataFrame =
+      if (side == "postings") read(s, path, asOf) else stats(s, path, asOf)
+
+    /** Build a fresh index at `path`: the docs land in `seed/`. */
+    def write(docs: DataFrame, path: String): Unit =
+      stage(docs, path, "seed")
+
+    /** Fold a batch of NEW documents EXACTLY ONCE under replay: a
+      * ledgered batchId is a committed no-op (false); the b-dir writes
+      * carry overwrite semantics so a replay after a mid-write crash
+      * rewrites the same dirs; the atomic ledger replace is the commit
+      * point. The existing index is never touched — the fold costs one
+      * tokenize of the BATCH.
+      */
+    def append(docs: DataFrame, path: String, batchId: Long): Boolean =
+      protocol(path).fold(batchId, sides)(stage(docs, path, s"b$batchId"))
+
+    /** Tombstone a batch of documents EXACTLY ONCE under replay — the
+      * index-side half of a takedown request. The stage writes the
+      * victim ids under `tombstones/d<deleteId>/`; a stats-carrying
+      * kind also writes a NEGATIVE delta `stats/d<deleteId>/` of
+      * `(-n, -sum_dl)` over the victims actually served (per-doc dl
+      * recovered from their own postings, which all carry it), so the
+      * mergeable sums stay exact without rewriting anything. The atomic
+      * ledger replace is the commit point: postings anti-join the
+      * tombstones and the stats fold in the delta from the same instant
+      * — result-identical to a rebuild without the docs. Cost
+      * O(|ids| + their postings); [[compact]] purges physically later.
+      * Replay-safe: an uncommitted stage reads the UNCHANGED served
+      * index, so recomputing the delta after a crash yields the same
+      * rows.
+      */
+    def delete(ids: DataFrame, path: String, deleteId: Long): Boolean = {
+      val p = protocol(path)
+      p.delete(deleteId, if (hasStats) Seq(s"stats/d$deleteId") else Nil) {
+        p.stageTombstones(ids, "doc_id", deleteId)
+        if (hasStats)
+          read(ids.sparkSession, path)
+            .join(ids.select(col("doc_id")).distinct(), Seq("doc_id"),
+              "left_semi")
+            .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
+            .agg((-count(lit(1))).as("n"),
+              (-coalesce(sum(col("dl")), lit(0L))).cast("long").as("sum_dl"))
+            .write.mode(SaveMode.Overwrite)
+            .parquet(s"${p.dir("stats")}/d$deleteId")
+      }
+    }
+
+    /** All committed postings minus committed tombstones: a union of
+      * per-sub-root partitioned reads (`basePath` scopes partition
+      * discovery per root, so a `bucket` filter pushes into EVERY
+      * branch's PartitionFilters). The tombstone anti-join sits above
+      * the union and vanishes when the index has no committed deletes.
+      * `asOf` scopes dirs and tombstones to a ledger horizon at list
+      * time (`FoldProtocol.readCommittedStrippedAsOf`).
+      */
+    def read(s: SparkSession, path: String,
+        asOf: Option[Long] = None): DataFrame = {
+      val p = protocol(path)
+      def scan(r: String) =
+        s.read.schema(schema).option("basePath", r).parquet(r)
+      asOf.fold(p.readCommittedStripped(s, "postings", "doc_id")(scan))(
+        p.readCommittedStrippedAsOf(s, "postings", "doc_id", _)(scan))
+    }
+
+    /** The stats side re-summed over the committed sub-roots (seed and
+      * `b<id>` positive, `d<id>` negative; ≤ `asOf` when given) — exact
+      * integer sums, never through the avgdl double.
+      */
+    def stats(s: SparkSession, path: String,
+        asOf: Option[Long] = None): DataFrame = {
+      val p = protocol(path)
+      asOf.fold(p.committedDirs("stats"))(p.committedDirsAsOf("stats", _))
+        .map(r => s.read.schema(StatsSchema).parquet(r))
+        .reduce(_.union(_))
+        .agg(sum(col("n")).cast("long").as("n"),
+          sum(col("sum_dl")).cast("long").as("sum_dl"))
+    }
+
+    /** Compact: rewrite the SERVED view into ONE `c<hw>/` dir per side,
+      * each published by a manifest commit (`FoldProtocol.publishDir`;
+      * the dir name carries the compaction's fold order so later
+      * deletes apply to it and stale post-crash tombstones do not).
+      * Without it fold N's readers pay an O(N) sub-root listing. The
+      * ledger is NOT touched: replayed batchIds keep short-circuiting
+      * after their dirs are compacted away. The side publishes are each
+      * atomic; between them both sides cover the corpus exactly once,
+      * so served results are identical in that window. The input is the
+      * tombstone-stripped view, so the publish doubles as the physical
+      * purge of deleted docs; the tombstones are dropped after it.
+      * Writer-lease-guarded.
+      */
+    def compact(s: SparkSession, path: String): Unit = {
+      val p = protocol(path)
+      p.withLease(lease) {
+        val cname = p.compactDirName()
+        writeSides(served(s, path, None))(
+          side => s"$path/.$side.compacting/$cname")
+        sides.foreach(side => p.publishDir(s".$side.compacting", side))
+        p.clearTombstones()
+      }
+    }
+
+    /** Floor-bounded retention ([[graft.index.FoldProtocol.vacuumKinds]]
+      * over the kind's sides): [[compact]] trades every as-of horizon for
+      * the reclaim, this collapses only commits ≤ `floor` into one
+      * `c<floor>` per side holding the served as-of-floor view, so
+      * horizons ≥ floor keep serving exactly while the per-commit dirs
+      * below are reclaimed; horizons < floor REFUSE. A fully-vacuumed
+      * floor is a committed no-op (false). Writer-lease-guarded.
+      */
+    def vacuum(s: SparkSession, path: String, floorRequested: Long): Boolean =
+      protocol(path).vacuumKinds(s, floorRequested, sides.map(side =>
+        side -> ((floor: Long, staging: String) =>
+          writeSide(side, served(s, path, Some(floor))(side), staging))))
+
+    /** Merge two independently-built roots into ONE servable root with
+      * no re-tokenize pass: the bucket is a global function of the key,
+      * so both roots agree on every key's bucket and the prune keeps
+      * pushing into every branch of the merged union. The primary's
+      * served view lands as `seed/`, the secondary's as ledgered fold
+      * `b0` with a `merged-from=` provenance line; BM25's stats rows
+      * ride along per side and df re-aggregates at serve time from the
+      * unioned postings — so over disjoint doc spaces the merged root
+      * serves EXACTLY what a from-scratch build over the union serves.
+      */
+    def merge(s: SparkSession, primary: String, secondary: String,
+        dest: String): Unit = {
+      val p = protocol(dest)
+      for ((src, sub) <- Seq(primary -> "seed", secondary -> "b0"))
+        writeSides(served(s, src, None))(side => s"${p.dir(side)}/$sub")
+      p.commitStaged(sides.map(side => s"$side/b0"), "0", "merged-from=" +
+        s"${new org.apache.hadoop.fs.Path(primary).getName}+" +
+        new org.apache.hadoop.fs.Path(secondary).getName)
+    }
+
+    /** Every side carries a committed seed OR compaction dir with its
+      * `_SUCCESS` — the predicate the stage-and-publish fixtures hand to
+      * `Layout.ensurePublishedDir` (it must also hold against the
+      * staging dir at the publish boundary).
+      */
+    def complete(s: SparkSession, r: String): Boolean = {
+      val fs = new org.apache.hadoop.fs.Path(r)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val p = protocol(r)
+      sides.forall(side => p.committedDirsOrEmpty(side).exists { dir =>
+        val n = dir.substring(dir.lastIndexOf('/') + 1)
+        (n == "seed" || n.matches("c\\d+")) &&
+          fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
+      })
+    }
+
+    /** Whether `c` has committed on root `r`: a fold or delete by its
+      * ledger entry, a merge by its `b0` fold, a vacuum by its `c<floor>`
+      * dirs with the seed gone.
+      */
+    private def committed(s: SparkSession, r: String, c: Commit): Boolean = {
+      val p = protocol(r)
+      val fs = new org.apache.hadoop.fs.Path(r)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      def exists(rel: String) = fs.exists(new org.apache.hadoop.fs.Path(rel))
+      c match {
+        case Commit.Seed(_) => true
+        case Commit.Fold(_, id) => p.foldedBatches().contains(id)
+        case Commit.Takedown(_, id) => p.deletedBatches().contains(id)
+        case Commit.Merge(_, _) => p.foldedBatches().contains(0L)
+        case Commit.Vacuum(f) => sides.forall(side =>
+          exists(s"${p.dir(side)}/c$f/_SUCCESS") &&
+            !exists(s"${p.dir(side)}/seed"))
+      }
+    }
+
+    /** Build-if-absent the gate fixture `sc` over `d`'s documents,
+      * stage-and-publish: a root that is complete with every commit of
+      * the script landed is reused, anything partial is rebuilt. Every
+      * script is deterministic, so a finished root re-serves without
+      * re-running it.
+      */
+    def ensure(s: SparkSession, d: String, sc: Scenario): String =
+      Layout.ensurePublishedDir(s, fixtureRoot(s, d, prefix + sc.suffix))(
+        r => complete(s, r) && sc.script.forall(committed(s, r, _))) { st =>
+        val docs = Tables.documents(s, d)
+        sc.script.foreach {
+          case Commit.Seed(c) => write(docs.filter(c), st)
+          case Commit.Fold(c, id) => append(docs.filter(c), st, id)
+          case Commit.Takedown(c, id) =>
+            delete(docs.filter(c).select(col("doc_id")), st, id)
+          case Commit.Vacuum(f) => vacuum(s, st, f)
+          case Commit.Merge(a, b) =>
+            merge(s, ensure(s, d, a), ensure(s, d, b), st)
+        }
+      }
+  }
+
+  /** One step of a fixture's commit script; document sets are
+    * predicates over `documents`.
+    */
+  private[graft] sealed trait Commit
+  private[graft] object Commit {
+    final case class Seed(docs: Column) extends Commit
+    final case class Fold(docs: Column, batchId: Long) extends Commit
+    final case class Takedown(docs: Column, deleteId: Long) extends Commit
+    final case class Vacuum(floor: Long) extends Commit
+    /** Merge two independently-built source fixtures, `a` primary. */
+    final case class Merge(a: Scenario, b: Scenario) extends Commit
+  }
+
+  /** A gate fixture: the root is named `<kind prefix><suffix>`. */
+  private[graft] final case class Scenario(suffix: String, script: Commit*)
+
+  /** The fixture table every kind builds from. Waves: history =
+    * doc_id % 5 ≠ 4, late = the rest; takedown victims = doc_id % 7 = 3
+    * (they span both waves); merge crawls A = doc_id % 3 ≠ 2 and B = the
+    * rest. The as-of layout puts ledger ids at DISTINCT dir orders (seed
+    * 0, fold `b1`, delete `d2`) so every id is a distinguishable
+    * horizon.
+    */
+  private[graft] object Scenario {
+    import Commit._
+    private val all = lit(true)
+    private val hist = col("doc_id") % 5 =!= 4
+    private val late = col("doc_id") % 5 === 4
+    private val victims = col("doc_id") % 7 === 3
+    private val crawlA = col("doc_id") % 3 =!= 2
+    private val crawlB = col("doc_id") % 3 === 2
+
+    val Index = Scenario("_index", Seed(all))
+    val Grown = Scenario("_grown", Seed(hist), Fold(late, 0L))
+    val Deleted = Scenario("_del", Seed(all), Takedown(victims, 0L))
+    val Evolved = Scenario("_evolved",
+      Seed(hist), Fold(late, 0L), Takedown(victims, 1L))
+    val AsOf = Scenario("_asof",
+      Seed(hist), Fold(late, 1L), Takedown(victims, 2L))
+    /** The as-of lifecycle vacuumed at floor 1: the seed collapses into
+      * c1, horizon 0 is reclaimed, horizons 1 and 2 keep serving.
+      */
+    val Vacuumed = Scenario("_vacuum", AsOf.script :+ Vacuum(1L): _*)
+    val Merged = Scenario("_merged", Merge(
+      Scenario("_src_a", Seed(crawlA)), Scenario("_src_b", Seed(crawlB))))
+    /** Merge × time travel: two crawls of the HISTORY wave merged, then
+      * the late wave folds as b1 and the takedown lands as d2 ON the
+      * merged root, so horizons straddle the merge.
+      */
+    val MergedAsOf = Scenario("_merged_asof",
+      Merge(Scenario("_ma_src_a", Seed(hist && crawlA)),
+        Scenario("_ma_src_b", Seed(hist && crawlB))),
+      Fold(late, 1L), Takedown(victims, 2L))
+  }
+
+  /** The BM25 inverted index: `(word, doc_id, tf, dl)` postings — dl
+    * is denormalized onto each posting (8 bytes/row) so serving never
+    * joins a doc-length table — plus the mergeable stats side.
+    */
+  private[graft] val Bm25 = new PostingsKind("bm25", "graft_bm25",
+    "compact-bm25",
+    "word STRING, doc_id BIGINT, tf BIGINT, dl INT, bucket BIGINT",
+    "word", docs => Par.fanOut(docs)
       .select(col("doc_id"), words(col("text")).as("ws"))
       .select(col("doc_id"), size(col("ws")).as("dl"),
         explode(col("ws")).as("word"))
       .groupBy(col("word"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", pmod(xxhash64(col("word")), lit(Buckets))))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"${p.dir("postings")}/$sub")
-    docs
-      .select(size(words(col("text"))).as("dl"))
-      .agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("sum_dl"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"${p.dir("stats")}/$sub")
-  }
+      .agg(count(lit(1)).as("tf")), hasStats = true)
 
-  /** Build a fresh BM25 index at `path`: the corpus lands in the
-    * `seed/` sub-root.
-    */
+  /** The positional phrase (next-word) index, see [[bigramPostings]]. */
+  private[graft] val Phrase = new PostingsKind("phrase", "graft_phrase",
+    "compact-phrase", "bg STRING, doc_id BIGINT, pos INT, bucket BIGINT",
+    "bg", bigramPostings, hasStats = false)
+
+  /** The character-trigram substring index, see [[trigramPostings]]. */
+  private[graft] val Trigram = new PostingsKind("trgm", "graft_trgm",
+    "compact-trgm", "tg STRING, doc_id BIGINT, bucket BIGINT",
+    "tg", trigramPostings, hasStats = false)
+
+  /** The word-positional (NEAR) index, see [[wordPositions]]. */
+  private[graft] val Near = new PostingsKind("near", "graft_near",
+    "compact-near", "word STRING, doc_id BIGINT, pos INT, bucket BIGINT",
+    "word", wordPositions, hasStats = false)
+
+  // The BM25 verbs under their long-standing names (the benchmark
+  // harness and other modules call these).
   def writeBm25Index(docs: DataFrame, path: String): Unit =
-    writeSubRoot(docs, path, "seed")
-
-  /** BatchIds whose fold is fully committed. */
-  def bm25FoldedBatches(path: String): Set[Long] =
-    protocol(path).foldedBatches()
-
-  /** Committed fold batchIds of a PHRASE index root (same ledger
-    * dialect — named separately so call sites read against the right
-    * index kind).
-    */
-  def phraseFoldedBatches(path: String): Set[Long] =
-    protocol(path).foldedBatches()
-
-  /** Fold a batch of NEW documents into a persisted BM25 index,
-    * EXACTLY ONCE under replay: a ledgered batchId is a committed
-    * no-op; the b-dir writes carry overwrite semantics so a replay
-    * after a mid-write crash rewrites the same dirs; the atomic ledger
-    * replace is the commit point. The existing index is never touched
-    * — the fold costs one tokenize of the BATCH.
-    */
+    Bm25.write(docs, path)
   def appendToBm25Index(docs: DataFrame, path: String,
-      batchId: Long): Boolean =
-    protocol(path).fold(batchId, Seq("postings", "stats")) {
-      stageBm25Fold(docs, path, batchId)
-    }
-
-  /** Fold step 1 (exposed to the spec so a crash between the write and
-    * the ledger commit can be simulated): an uncommitted b-dir is
-    * invisible to readers.
-    */
-  private[graft] def stageBm25Fold(docs: DataFrame, path: String,
-      batchId: Long): Unit =
-    writeSubRoot(docs, path, s"b$batchId")
-
-  /** Fold step 2: publish the grown ledger via one atomic file move. */
-  private[graft] def commitBm25Fold(path: String, batchId: Long): Unit =
-    protocol(path).commit(batchId.toString)
-
-  /** Tombstone a batch of documents, EXACTLY ONCE under replay — the
-    * index-side half of a takedown/retraction request. Stage writes (1)
-    * the victim ids under `tombstones/d<deleteId>/` and (2) a NEGATIVE
-    * stats delta sub-root `stats/d<deleteId>/` holding `(-n, -sum_dl)`
-    * for the docs actually present in the served index (per-doc dl
-    * recovered from their own postings — a doc's postings all carry its
-    * denormalized dl), so the mergeable-stats sum stays exact without
-    * rewriting anything. The atomic ledger replace (`d<deleteId>`
-    * entry) is the commit point: postings anti-join the tombstones and
-    * the stats fold in the negative delta from the same instant, so df,
-    * N and avgdl all serve as if the docs were never indexed —
-    * result-identical to a from-scratch rebuild without them.
-    * [[compactBm25Index]] later purges the postings physically. Cost:
-    * O(|ids| + their postings) — the corpus postings are never
-    * rewritten. Replay-safe: an uncommitted stage reads the UNCHANGED
-    * served index, so recomputing the delta after a crash yields the
-    * same rows.
-    */
+      batchId: Long): Boolean = Bm25.append(docs, path, batchId)
   def deleteFromBm25Index(ids: DataFrame, path: String,
-      deleteId: Long): Boolean = {
-    val p = protocol(path)
-    p.delete(deleteId, Seq(s"stats/d$deleteId")) {
-      p.stageTombstones(ids, "doc_id", deleteId)
-      indexPostings(ids.sparkSession, path)
-        .join(ids.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-        .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-        .agg((-count(lit(1))).as("n"),
-          (-coalesce(sum(col("dl")), lit(0L))).cast("long").as("sum_dl"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"${p.dir("stats")}/d$deleteId")
-    }
-  }
-
-  /** The committed sub-roots under `<root>/<kind>`: every non-batch dir
-    * (seed, compact) plus exactly the ledgered b-dirs and d-dirs —
-    * orphan dirs from a crashed fold stay invisible until their replay
-    * commits.
-    */
-  private def subRoots(path: String, kind: String): Seq[String] =
-    protocol(path).committedDirs(kind)
-
-  /** All committed postings minus committed tombstones: a union of
-    * per-sub-root partitioned reads (`basePath` scopes partition
-    * discovery per root, so a `bucket` filter pushes into EVERY
-    * branch's PartitionFilters — the prune holds across seed + appended
-    * batches alike). The tombstone anti-join sits above the union and
-    * vanishes entirely when the index has no committed deletes.
-    */
-  private def indexPostings(s: SparkSession, path: String): DataFrame =
-    protocol(path).readCommittedStripped(s, "postings", "doc_id")(r =>
-      s.read.schema(PostingsSchema).option("basePath", r).parquet(r))
-
-  /** [[indexPostings]] AS OF a ledger horizon (see
-    * `FoldProtocol.readCommittedStrippedAsOf`): fold sub-roots and
-    * tombstone batches above the horizon are invisible.
-    */
-  private def indexPostingsAsOf(s: SparkSession, path: String,
-      asOf: Long): DataFrame =
-    protocol(path).readCommittedStrippedAsOf(s, "postings", "doc_id",
-      asOf)(r =>
-      s.read.schema(PostingsSchema).option("basePath", r).parquet(r))
-
-  /** Corpus stats merged across committed sub-roots (delete batches
-    * contribute negative deltas): exact integer sums, divided once —
-    * growing or shrinking the index cannot drift avgdl.
-    */
-  private def indexStats(s: SparkSession, path: String): DataFrame =
-    statsOf(s, subRoots(path, "stats"))
-
-  /** [[indexStats]] AS OF a ledger horizon: the same merged-delta
-    * arithmetic over only the stats sides (seed, `b<id>` positive,
-    * `d<id>` negative) whose ledger id is ≤ asOf — so N and avgdl are
-    * exactly the horizon corpus's.
-    */
-  private def indexStatsAsOf(s: SparkSession, path: String,
-      asOf: Long): DataFrame =
-    statsOf(s, protocol(path).committedDirsAsOf("stats", asOf))
-
-  private def statsOf(s: SparkSession, dirs: Seq[String]): DataFrame =
-    dirs.map(r => s.read.schema(StatsSchema).parquet(r))
-      .reduce(_.union(_))
-      .agg(sum(col("n")).cast("double").as("n"),
-        (sum(col("sum_dl")).cast("double") / sum(col("n"))).as("avgdl"))
-
-  /** Compact the index: rewrite all committed sub-roots into ONE
-    * `c<hw>/` dir per side (postings still bucket-partitioned, one
-    * file per bucket; stats re-merged to one row), each published by a
-    * manifest commit (`FoldProtocol.publishDir` — a resolved
-    * generation stays readable for one further publish plus the
-    * age-based grace bound; the dir name carries the compaction's fold
-    * order so later deletes apply to it and stale post-crash
-    * tombstones do not). Without it fold N's readers pay an O(N)
-    * sub-root listing. The ledger is NOT touched: replayed batchIds
-    * (and deleteIds) keep short-circuiting after their dirs are
-    * compacted away. The two publishes are each atomic; between them
-    * readers see compacted postings with uncompacted stats — both
-    * sides cover the corpus exactly once, so served results are
-    * identical in that window. The compaction input is the SERVED view
-    * (tombstones stripped, negative stats deltas folded in), so the
-    * publish doubles as the physical purge of deleted docs; the
-    * tombstone dirs are dropped after it. Writer-lease-guarded.
-    */
-  def compactBm25Index(s: SparkSession, path: String): Unit = {
-    val p = protocol(path)
-    p.withLease("compact-bm25") {
-      val cname = p.compactDirName()
-      bucketSliced(indexPostings(s, path))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$path/.postings.compacting/$cname")
-      subRoots(path, "stats").map(r =>
-        s.read.schema(StatsSchema).parquet(r))
-        .reduce(_.union(_))
-        .agg(sum(col("n")).cast("long").as("n"),
-          sum(col("sum_dl")).cast("long").as("sum_dl"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/.stats.compacting/$cname")
-      p.publishDir(".postings.compacting", "postings")
-      p.publishDir(".stats.compacting", "stats")
-      p.clearTombstones()
-    }
-  }
-
-  /** Floor-bounded retention for the BM25 index — the index-side twin
-    * of `TimeTravel.vacuum`, completing the lifecycle the full
-    * compaction cannot: [[compactBm25Index]] collapses EVERYTHING
-    * (trading every as-of horizon for the reclaim), this collapses
-    * only commits ≤ `floor` into one `c<floor>` per side, so horizons
-    * ≥ floor keep serving exactly as before while the per-commit dirs
-    * below — unbounded small-dir growth at a streaming-ingest cadence
-    * — are reclaimed. Horizons < floor REFUSE via the standard
-    * compaction honesty guard.
-    *
-    * Per side: postings `c<floor>` = the SERVED as-of-floor view
-    * (tombstones ≤ floor stripped — the collapse doubles as their
-    * physical purge), still bucket-partitioned so the static term
-    * prune keeps pushing; stats `c<floor>` = one summed row over the
-    * stats deltas ≤ floor (absorbing the deletes' negative rows).
-    * Each side stages into a dot-dir and lands by ONE atomic rename —
-    * the commit point, because the protocol's compaction-supersedes
-    * rule hides the collapsed sources the instant the c-dir appears;
-    * the purges after are reclamation. A crash between the two side
-    * renames serves collapsed postings with uncollapsed stats — both
-    * cover the corpus exactly once (the [[compactBm25Index]] window
-    * argument). Replays skip present targets and finish the purges; a
-    * fully-vacuumed floor is a committed no-op. Floor normalization
-    * and the surviving-tombstone detachment guard are the shared
-    * FoldProtocol preamble. Writer-lease-guarded.
-    */
+      deleteId: Long): Boolean = Bm25.delete(ids, path, deleteId)
+  def compactBm25Index(s: SparkSession, path: String): Unit =
+    Bm25.compact(s, path)
   def vacuumBm25Index(s: SparkSession, path: String,
-      floorRequested: Long): Boolean = {
-    val p = protocol(path)
-    p.vacuumKinds(s, floorRequested, Seq(
-      "postings" -> ((floor, staging) =>
-        bucketSliced(indexPostingsAsOf(s, path, floor))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(staging)),
-      "stats" -> ((floor, staging) =>
-        // integer re-sum of the stats deltas ≤ floor (absorbing the
-        // deletes' negative rows) — never through the avgdl double
-        p.committedDirsAsOf("stats", floor)
-          .map(r => s.read.schema(StatsSchema).parquet(r))
-          .reduce(_.union(_))
-          .agg(sum(col("n")).cast("long").as("n"),
-            sum(col("sum_dl")).cast("long").as("sum_dl"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(staging))))
-  }
-
-  /** Build-once cache keyed by the sf dir, same protocol as
-    * `Similarity.ensureIvfIndex`: a complete index (a seed OR `c<hw>`
-    * compaction _SUCCESS marker on both sides, resolved through the
-    * manifest) is reused, anything partial is torn down and rebuilt.
-    */
+      floorRequested: Long): Boolean = Bm25.vacuum(s, path, floorRequested)
   def ensureBm25Index(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_index"))(
-      bm25Complete(s, _)) { staging =>
-      writeBm25Index(Tables.documents(s, d), staging)
-    }
+    Bm25.ensure(s, d, Scenario.Index)
 
   private def fixtureRoot(s: SparkSession, d: String,
       name: String): String =
@@ -426,196 +526,15 @@ object Retrieval {
       s.conf.get("spark.sql.warehouse.dir"),
       name + d.replaceAll("\\W", "_")).toString
 
-  /** Both index sides carry a committed seed OR compaction dir with its
-    * `_SUCCESS` — the completeness predicate the stage-and-publish
-    * fixtures hand to `Layout.ensurePublishedDir` (it must also hold
-    * against the staging dir at the publish boundary).
+  /** Corpus stats `(n, avgdl)` of a BM25 root, merged across committed
+    * sub-roots (delete batches contribute negative deltas): exact
+    * integer sums divided once, so growing or shrinking the index
+    * cannot drift avgdl.
     */
-  private def bm25Complete(s: SparkSession, r: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(r)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val p = protocol(r)
-    Seq("postings", "stats").forall(side =>
-      p.committedDirsOrEmpty(side).exists { dir =>
-        val name = dir.substring(dir.lastIndexOf('/') + 1)
-        (name == "seed" || name.matches("c\\d+")) &&
-          fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
-      })
-  }
-
-  /** Merge two independently-built BM25 roots into ONE servable root —
-    * the inverted-index half of the cross-root union
-    * (`Similarity.mergeIvfIndexes` is the ANN half). The postings
-    * layout makes this a pure INDEX-level merge with no re-tokenize
-    * pass: `bucket = pmod(xxhash64(word), Buckets)` is a global
-    * function of the word, so both roots already agree on every word's
-    * bucket and the static bucket prune keeps pushing into every
-    * branch of the merged union. The primary's committed
-    * (tombstone-stripped) postings land as `seed/`, the secondary's as
-    * ledgered fold `b0` with a `merged-from=` provenance line; the
-    * mergeable `(n, sum_dl)` stats rows ride along per side and df
-    * re-aggregates at serve time from the unioned postings themselves
-    * — so over disjoint doc spaces the merged root serves EXACTLY what
-    * a from-scratch build over the union corpus serves
-    * (`text_bm25_merged` reuses `text_bm25`'s oracle verbatim).
-    *
-    * Cost: two partitioned copies, zero tokenization, zero joins; at
-    * 100 TB an in-place variant folds the secondary's postings straight
-    * into the primary root as its next b-dir and skips the seed copy.
-    */
-  def mergeBm25Indexes(s: SparkSession, primary: String,
-      secondary: String, dest: String): Unit = {
-    val p = protocol(dest)
-    def mergedStats(src: String): DataFrame =
-      subRoots(src, "stats").map(r =>
-        s.read.schema(StatsSchema).parquet(r))
-        .reduce(_.union(_))
-        .agg(sum(col("n")).cast("long").as("n"),
-          sum(col("sum_dl")).cast("long").as("sum_dl"))
-    def copySide(src: String, sub: String): Unit = {
-      bucketSliced(indexPostings(s, src))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"${p.dir("postings")}/$sub")
-      mergedStats(src)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"${p.dir("stats")}/$sub")
-    }
-    copySide(primary, "seed")
-    copySide(secondary, "b0")
-    p.commitStaged(Seq("postings/b0", "stats/b0"), "0", "merged-from=" +
-      s"${new org.apache.hadoop.fs.Path(primary).getName}+" +
-      new org.apache.hadoop.fs.Path(secondary).getName)
-  }
-
-  /** Build-if-absent the merged-index gate fixture: two INDEPENDENT
-    * roots (crawl A = doc_id % 3 ≠ 2, crawl B = the rest), merged via
-    * [[mergeBm25Indexes]] with A primary.
-    */
-  def ensureMergedBm25Index(s: SparkSession, d: String): String = {
-    val docs = Tables.documents(s, d)
-    val srcA = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_bm25_src_a"))(bm25Complete(s, _))(
-      st => writeBm25Index(docs.filter(col("doc_id") % 3 =!= 2), st))
-    val srcB = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_bm25_src_b"))(bm25Complete(s, _))(
-      st => writeBm25Index(docs.filter(col("doc_id") % 3 === 2), st))
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_merged"))(
-      r => bm25Complete(s, r) && protocol(r).foldedBatches().contains(0L)
-    )(st => mergeBm25Indexes(s, srcA, srcB, st))
-  }
-
-  /** Build-if-absent the merged×time-travel gate fixture — the
-    * composition `text_bm25_merged` and `text_bm25_asof` each prove
-    * alone: two independent crawls of the HISTORY wave (doc_id % 5 ≠ 4
-    * split % 3) merged (seed + `merged-from=` fold b0), then the
-    * lifecycle continues ON the merged root — the late wave folds as
-    * b1 and a takedown tombstones d2 — so horizons STRADDLE the merge:
-    * 0 = just-merged (history union), 1 = + late wave, 2 = post-
-    * takedown. Keyed on the takedown's ledger entry (commits last).
-    */
-  def ensureMergedAsOfBm25Index(s: SparkSession, d: String): String = {
-    val docs = Tables.documents(s, d)
-    val hist = docs.filter(col("doc_id") % 5 =!= 4)
-    val srcA = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_bm25_ma_src_a"))(bm25Complete(s, _))(
-      st => writeBm25Index(hist.filter(col("doc_id") % 3 =!= 2), st))
-    val srcB = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_bm25_ma_src_b"))(bm25Complete(s, _))(
-      st => writeBm25Index(hist.filter(col("doc_id") % 3 === 2), st))
-    Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_bm25_merged_asof"))(
-      r => bm25Complete(s, r) && protocol(r).deletedBatches().contains(2L)
-    ) { st =>
-      mergeBm25Indexes(s, srcA, srcB, st)
-      appendToBm25Index(docs.filter(col("doc_id") % 5 === 4), st, 1L)
-      deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), st, 2L)
-    }
-  }
-
-  /** The grown-index gate: seed from the history wave (doc_id % 5 ≠ 4),
-    * fold the remainder as one ledgered append, serve — result must be
-    * IDENTICAL to scoring the whole corpus, so the fold itself sits
-    * under `text_bm25`'s value-level oracle. Cached like
-    * `ensureBm25Index` (the fold is deterministic, so a completed
-    * grown index re-serves without re-folding).
-    */
-  def ensureGrownBm25Index(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_grown"))(
-      r => protocol(r).foldedBatches().contains(0L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToBm25Index(docs.filter(col("doc_id") % 5 === 4), staging, 0L)
-    }
-
-  /** Build-if-absent the full-lifecycle gate fixture: seed from the
-    * history wave (doc_id % 5 ≠ 4), fold the remainder as a ledgered
-    * append (batch 0), then tombstone doc_id % 7 = 3 as a ledgered
-    * delete (batch 1) whose victims span BOTH waves — the
-    * seed-append-takedown sequence a production index lives through.
-    * Keyed on the delete's ledger entry (it commits last, so its
-    * presence implies the whole sequence completed).
-    */
-  def ensureEvolvedBm25Index(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_evolved"))(
-      r => protocol(r).deletedBatches().contains(1L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToBm25Index(docs.filter(col("doc_id") % 5 === 4), staging, 0L)
-      deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 1L)
-    }
-
-  /** Build-if-absent the AS-OF gate fixture — `Similarity
-    * .ensureAsOfIvfIndex`'s contract on the inverted index: ledger ids
-    * at DISTINCT dir orders (seed 0, fold `b1`, delete `d2`) so every
-    * id is a distinguishable snapshot horizon, including the stats
-    * side's `d2` negative delta.
-    */
-  def ensureAsOfBm25Index(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_asof"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToBm25Index(docs.filter(col("doc_id") % 5 === 4), staging, 1L)
-      deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-    }
-
-  /** Build-if-absent the VACUUMED-index gate fixture: the as-of
-    * lifecycle (seed = history wave, fold b1 = late wave, takedown d2)
-    * then [[vacuumBm25Index]] at floor 1 — the seed collapses into c1,
-    * horizon 0 is reclaimed, horizons 1 and 2 must keep serving
-    * hash-equal to the unvacuumed construction (same oracle as
-    * text_bm25_asof's surviving branches). Completeness is the
-    * vacuum's POST-state: c1 present on both sides, seed gone, the
-    * takedown ledgered.
-    */
-  def ensureVacuumedBm25Index(s: SparkSession, d: String): String = {
-    val root = fixtureRoot(s, d, "graft_bm25_vacuum")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      protocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/c1", "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("stats")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/seed"))
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToBm25Index(docs.filter(col("doc_id") % 5 === 4), staging, 1L)
-      deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-      vacuumBm25Index(s, staging, 1L)
-    }
-  }
+  private def indexStats(s: SparkSession, path: String,
+      asOf: Option[Long] = None): DataFrame =
+    Bm25.stats(s, path, asOf).select(col("n").cast("double").as("n"),
+      (col("sum_dl").cast("double") / col("n")).as("avgdl"))
 
   /** BM25 served from the persisted index. The query terms' buckets are
     * computed driver-side with the SAME xxhash64 the build used (a
@@ -630,8 +549,7 @@ object Retrieval {
       terms: Seq[String] = QueryTerms,
       asOf: Option[Long] = None): DataFrame =
     scorePostings(queryPostings(s, indexPath, terms, asOf),
-      asOf.fold(indexStats(s, indexPath))(
-        indexStatsAsOf(s, indexPath, _)))
+      indexStats(s, indexPath, asOf))
 
   /** The query terms' full posting set off the pruned index read —
     * shared by the unfiltered, filtered and as-of serves.
@@ -641,8 +559,7 @@ object Retrieval {
     // constant term set → buckets computed driver-side (LocalHash),
     // not via a toDF/distinct/collect job per serve
     val buckets = graft.functions.LocalHash.bucketsOf(terms, Buckets)
-    asOf.fold(indexPostings(s, indexPath))(
-        indexPostingsAsOf(s, indexPath, _))
+    Bm25.read(s, indexPath, asOf)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("word").isInCollection(terms))
       .select(col("word"), col("doc_id"), col("tf"), col("dl"))
@@ -789,7 +706,7 @@ object Retrieval {
       .select(pmod(xxhash64(col("word")), lit(Buckets)).as("bucket"))
       .distinct().collect().map(_.getLong(0)).sorted
     val words = qterms.select(col("word")).distinct()
-    val qPostings = indexPostings(s, indexPath)
+    val qPostings = Bm25.read(s, indexPath)
       .filter(col("bucket").isin(buckets: _*))
       .join(words, Seq("word"), "left_semi")
       .select(col("word"), col("doc_id"), col("tf"), col("dl"))
@@ -838,22 +755,6 @@ object Retrieval {
 
   private val bm25OracleSql: String = bm25OracleSqlOver("TRUE")
 
-  /** Build-if-absent the DELETED-index gate fixture: the full corpus
-    * seeded, then one committed delete batch (doc_id % 7 = 3)
-    * tombstoned through [[deleteFromBm25Index]]. Keyed on the delete's
-    * ledger entry: a crash anywhere before its commit rebuilds from
-    * scratch.
-    */
-  def ensureDeletedBm25Index(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_del"))(
-      r => protocol(r).deletedBatches().contains(0L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs, staging)
-      deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 0L)
-    }
-
   // ---- positional phrase index (next-word postings) ----
   //   <root>/postings/<sub>/ — (bg, doc_id, pos) partitioned by
   //                      `bucket=pmod(xxhash64(bg), Buckets)`: one row
@@ -868,12 +769,8 @@ object Retrieval {
   //                      over 100 TB of bodies. Postings cost one row
   //                      per token (vs one per (term, doc) for BM25's),
   //                      the standard positional-index trade.
-  // The root speaks the SAME FoldProtocol dialect as the BM25 index
-  // (seed/b/c/d sub-roots, `_postings_ledger`, doc_id tombstones), so
-  // ledgered folds, takedowns and compaction compose identically; the
-  // gate exercises the seed build.
-
-  private val PhraseSchema = "bg STRING, doc_id BIGINT, pos INT, bucket BIGINT"
+  // The root is the [[Phrase]] postings kind: the shared lifecycle
+  // (seed/b/c sub-roots, `_postings_ledger`, doc_id tombstones).
 
   /** Adjacent word pairs of each document with their 0-based anchor
     * position — pure in-row work (one tokenize scan, an array
@@ -888,97 +785,6 @@ object Retrieval {
         "transform(slice(ws, 1, size(ws) - 1)," +
           " (x, i) -> concat(x, ' ', element_at(ws, i + 2)))"))
         .as(Seq("pos", "bg")))
-
-  private def writePhraseSubRoot(docs: DataFrame, path: String,
-      sub: String): Unit =
-    bucketSliced(bigramPostings(docs)
-      .withColumn("bucket", pmod(xxhash64(col("bg")), lit(Buckets))))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"${protocol(path).dir("postings")}/$sub")
-
-  /** Build a fresh phrase index at `path` (seed sub-root, same
-    * write-fan-out discipline as [[writeBm25Index]]).
-    */
-  def writePhraseIndex(docs: DataFrame, path: String): Unit =
-    writePhraseSubRoot(docs, path, "seed")
-
-  /** Ledgered append, exactly once under replay — the BM25 fold
-    * contract on the positional postings (no stats side: the phrase
-    * serve needs no corpus statistics, so a fold stages exactly one
-    * guarded dir).
-    */
-  def appendToPhraseIndex(docs: DataFrame, path: String,
-      batchId: Long): Boolean =
-    protocol(path).fold(batchId, Seq("postings")) {
-      writePhraseSubRoot(docs, path, s"b$batchId")
-    }
-
-  /** Ledgered document takedown, exactly once — tombstones only (the
-    * postings anti-join them at serve time; no stats delta to stage).
-    * O(|ids|): nothing is rewritten until compaction.
-    */
-  def deleteFromPhraseIndex(ids: DataFrame, path: String,
-      deleteId: Long): Boolean = {
-    val p = protocol(path)
-    p.delete(deleteId) { p.stageTombstones(ids, "doc_id", deleteId) }
-  }
-
-  /** Build-if-absent gate fixture (stage-and-publish, like every
-    * warehouse fixture).
-    */
-  def ensurePhraseIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_phrase_index"))(
-      phraseComplete(s, _)) { staging =>
-      writePhraseIndex(Tables.documents(s, d), staging)
-    }
-
-  private def phraseComplete(s: SparkSession, r: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(r)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    protocol(r).committedDirsOrEmpty("postings").exists { dir =>
-      val name = dir.substring(dir.lastIndexOf('/') + 1)
-      (name == "seed" || name.matches("c\\d+")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
-    }
-  }
-
-  /** All committed positional postings minus committed tombstones —
-    * the phrase twin of [[indexPostings]] (same basePath-scoped
-    * per-sub-root partitioned reads, so a `bucket` filter pushes into
-    * every union branch).
-    */
-  private def phrasePostings(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = asOf match {
-    case None =>
-      protocol(path).readCommittedStripped(s, "postings", "doc_id")(r =>
-        s.read.schema(PhraseSchema).option("basePath", r).parquet(r))
-    case Some(h) =>
-      // list-time dir/tombstone scoping — the indexPostingsAsOf
-      // contract on the next-word positional payload
-      protocol(path).readCommittedStrippedAsOf(s, "postings", "doc_id",
-        h)(r => s.read.schema(PhraseSchema).option("basePath", r).parquet(r))
-  }
-
-  /** Compact the phrase index: every committed posting (tombstones
-    * already anti-joined away) rewritten as ONE `c<hw>` dir; sub-roots
-    * and tombstones retire atomically through the same
-    * publish-and-clear as [[compactBm25Index]]. Serve-identical by
-    * construction — the reader sees either the old union or the new
-    * single root.
-    */
-  def compactPhraseIndex(s: SparkSession, path: String): Unit = {
-    val p = protocol(path)
-    p.withLease("compact-phrase") {
-      val cname = p.compactDirName()
-      bucketSliced(phrasePostings(s, path))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$path/.postings.compacting/$cname")
-      p.publishDir(".postings.compacting", "postings")
-      p.clearTombstones()
-    }
-  }
 
   /** The gate's probe phrase — present at every shipped scale. */
   val ProbePhrase = "hash join key"
@@ -1001,7 +807,7 @@ object Retrieval {
     val pairs = ws.sliding(2).map(_.mkString(" ")).toVector
     val offsets = pairs.zipWithIndex
     val buckets = graft.functions.LocalHash.bucketsOf(pairs.distinct, Buckets)
-    val posts = phrasePostings(s, indexPath, asOf)
+    val posts = Phrase.read(s, indexPath, asOf)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("bg").isInCollection(pairs.distinct))
     posts.join(broadcast(offsets.toDF("bg", "off")), Seq("bg"))
@@ -1071,7 +877,7 @@ object Retrieval {
     val buckets = pairSet
       .select(pmod(xxhash64(col("bg")), lit(Buckets)).as("bucket"))
       .distinct().collect().map(_.getLong(0)).sorted
-    val posts = phrasePostings(s, indexPath)
+    val posts = Phrase.read(s, indexPath)
       .filter(col("bucket").isin(buckets: _*))
       .join(pairSet, Seq("bg"), "left_semi")
       .select(col("bg"), col("doc_id"), col("pos"))
@@ -1117,40 +923,6 @@ object Retrieval {
        |FROM r WHERE rank <= $TopK""".stripMargin
   }
 
-  /** Build-if-absent the phrase-index LIFECYCLE gate fixture: seed
-    * from the history wave (doc_id % 5 ≠ 4), fold the remainder as a
-    * ledgered append (batch 0), tombstone doc_id % 7 = 3 as a ledgered
-    * delete (batch 1) with victims in BOTH waves — keyed on the
-    * delete's ledger entry (it commits last).
-    */
-  def ensureEvolvedPhraseIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_phrase_evolved"))(
-      r => protocol(r).deletedBatches().contains(1L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writePhraseIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToPhraseIndex(docs.filter(col("doc_id") % 5 === 4), staging, 0L)
-      deleteFromPhraseIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 1L)
-    }
-
-  /** Build-if-absent the phrase AS-OF gate fixture — the
-    * [[ensureAsOfBm25Index]] lifecycle on the next-word index: seed
-    * the history wave (dir order 0), fold the remainder as `b1`,
-    * tombstone doc_id % 7 = 3 as `d2` — distinct ledger ids per dir
-    * order so every horizon is a distinguishable snapshot.
-    */
-  def ensureAsOfPhraseIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_phrase_asof"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writePhraseIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToPhraseIndex(docs.filter(col("doc_id") % 5 === 4), staging, 1L)
-      deleteFromPhraseIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-    }
-
   // ---- character-trigram substring (grep) index ----
   //   <root>/postings/<sub>/ — (tg, doc_id) DISTINCT rows partitioned
   //                      by `bucket=pmod(xxhash64(tg), Buckets)`: one
@@ -1169,12 +941,8 @@ object Retrieval {
   //                      a query reads ≤ n-2 of the `Buckets` posting
   //                      directories plus the candidate docs' rows —
   //                      never the corpus.
-  // The root speaks the same FoldProtocol dialect as the BM25/phrase
-  // indexes (seed/b/c/d sub-roots, `_postings_ledger`, doc_id
-  // tombstones), so ledgered folds, takedowns and compaction compose
-  // identically; `text_substring_evolved` value-gates the lifecycle.
-
-  private val TrigramSchema = "tg STRING, doc_id BIGINT, bucket BIGINT"
+  // The root is the [[Trigram]] postings kind (the shared lifecycle);
+  // `text_substring_evolved` value-gates it.
 
   /** Distinct character trigrams of each document — in-row work (the
     * lambda captures only the raw `text` ATTRIBUTE, so unlike the
@@ -1190,268 +958,6 @@ object Retrieval {
           sequence(lit(1), length(col("text")) - lit(2)),
           i => col("text").substr(i, lit(3)))))
         .otherwise(typedLit(Seq.empty[String]))).as("tg"))
-
-  private def writeSubstringSubRoot(docs: DataFrame, path: String,
-      sub: String): Unit =
-    bucketSliced(trigramPostings(docs)
-      .withColumn("bucket", pmod(xxhash64(col("tg")), lit(Buckets))))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"${protocol(path).dir("postings")}/$sub")
-
-  /** Build a fresh substring index at `path` (seed sub-root). */
-  def writeSubstringIndex(docs: DataFrame, path: String): Unit =
-    writeSubstringSubRoot(docs, path, "seed")
-
-  /** Ledgered append of new documents' trigram postings — the phrase
-    * fold contract (postings only, no stats side).
-    */
-  def appendToSubstringIndex(docs: DataFrame, path: String,
-      batchId: Long): Boolean =
-    protocol(path).fold(batchId, Seq("postings")) {
-      writeSubstringSubRoot(docs, path, s"b$batchId")
-    }
-
-  /** Ledgered document takedown — tombstones only, O(|ids|). */
-  def deleteFromSubstringIndex(ids: DataFrame, path: String,
-      deleteId: Long): Boolean = {
-    val p = protocol(path)
-    p.delete(deleteId) { p.stageTombstones(ids, "doc_id", deleteId) }
-  }
-
-  /** All committed trigram postings minus committed tombstones. */
-  private def substringPostings(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = asOf match {
-    case None =>
-      protocol(path).readCommittedStripped(s, "postings", "doc_id")(r =>
-        s.read.schema(TrigramSchema).option("basePath", r).parquet(r))
-    case Some(h) =>
-      protocol(path).readCommittedStrippedAsOf(s, "postings", "doc_id",
-        h)(r =>
-        s.read.schema(TrigramSchema).option("basePath", r).parquet(r))
-  }
-
-  /** Compact the trigram index: every committed posting (tombstones
-    * already anti-joined away) rewritten as ONE `c<hw>` dir — the
-    * [[compactPhraseIndex]] publish-and-clear on trigram postings.
-    */
-  def compactSubstringIndex(s: SparkSession, path: String): Unit = {
-    val p = protocol(path)
-    p.withLease("compact-trgm") {
-      val cname = p.compactDirName()
-      bucketSliced(substringPostings(s, path))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$path/.postings.compacting/$cname")
-      p.publishDir(".postings.compacting", "postings")
-      p.clearTombstones()
-    }
-  }
-
-  /** Build-if-absent gate fixture (stage-and-publish). */
-  def ensureSubstringIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_trgm_index"))(
-      phraseComplete(s, _)) { staging =>
-      writeSubstringIndex(Tables.documents(s, d), staging)
-    }
-
-  /** Lifecycle fixture: seed the history wave, fold the remainder
-    * (batch 0), tombstone doc_id % 7 = 3 (batch 1) — victims span both
-    * waves, keyed on the delete's ledger entry (it commits last).
-    */
-  def ensureEvolvedSubstringIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_trgm_evolved"))(
-      r => protocol(r).deletedBatches().contains(1L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeSubstringIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToSubstringIndex(docs.filter(col("doc_id") % 5 === 4),
-        staging, 0L)
-      deleteFromSubstringIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 1L)
-    }
-
-  /** Merge two independently-built trigram roots into ONE servable
-    * root — the third index kind speaking the cross-root union
-    * ([[mergeBm25Indexes]] / `Similarity.mergeIvfIndexes` are the
-    * others). Postings-only and globally bucketed, so the merge is two
-    * partitioned copies: primary as `seed/`, secondary as ledgered
-    * fold `b0` with provenance; the bucket prune pushes into both
-    * branches of the merged union unchanged. Disjoint doc spaces ⇒
-    * serve ≡ a from-scratch union build (`text_substring_merged`
-    * reuses `text_substring`'s oracle verbatim).
-    */
-  def mergeSubstringIndexes(s: SparkSession, primary: String,
-      secondary: String, dest: String): Unit =
-    mergePostingsRoots(s, primary, secondary, dest)(
-      substringPostings(s, _))
-
-  /** The shared cross-root union for any POSTINGS-ONLY bucketed index
-    * kind — trigram, positional phrase and word-positional all carry
-    * the same layout (`postings/<sub>/bucket=…`, bucket a global
-    * function of the posting key), so one kernel merges them all:
-    * primary's committed (tombstone-stripped) postings land as
-    * `seed/`, secondary's as ledgered fold `b0` with a `merged-from=`
-    * provenance line.
-    */
-  private def mergePostingsRoots(s: SparkSession, primary: String,
-      secondary: String, dest: String)(
-      read: String => DataFrame): Unit = {
-    val p = protocol(dest)
-    def copySide(src: String, sub: String): Unit =
-      bucketSliced(read(src))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"${p.dir("postings")}/$sub")
-    copySide(primary, "seed")
-    copySide(secondary, "b0")
-    p.commitStaged(Seq("postings/b0"), "0", "merged-from=" +
-      s"${new org.apache.hadoop.fs.Path(primary).getName}+" +
-      new org.apache.hadoop.fs.Path(secondary).getName)
-  }
-
-  /** Cross-root union of two positional phrase roots. */
-  def mergePhraseIndexes(s: SparkSession, primary: String,
-      secondary: String, dest: String): Unit =
-    mergePostingsRoots(s, primary, secondary, dest)(
-      phrasePostings(s, _))
-
-  /** Cross-root union of two word-positional (NEAR) roots. */
-  def mergeNearIndexes(s: SparkSession, primary: String,
-      secondary: String, dest: String): Unit =
-    mergePostingsRoots(s, primary, secondary, dest)(
-      nearPostings(s, _))
-
-  /** Build-if-absent a merged two-crawl fixture for any postings-only
-    * kind: crawl A = doc_id % 3 ≠ 2 primary, crawl B = the rest,
-    * each built independently then merged.
-    */
-  private def ensureMergedPostingsIndex(s: SparkSession, d: String,
-      prefix: String, write: (DataFrame, String) => Unit,
-      merge: (String, String, String) => Unit): String = {
-    val docs = Tables.documents(s, d)
-    val srcA = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, s"${prefix}_src_a"))(phraseComplete(s, _))(
-      st => write(docs.filter(col("doc_id") % 3 =!= 2), st))
-    val srcB = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, s"${prefix}_src_b"))(phraseComplete(s, _))(
-      st => write(docs.filter(col("doc_id") % 3 === 2), st))
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, s"${prefix}_merged"))(
-      r => phraseComplete(s, r) && protocol(r).foldedBatches().contains(0L)
-    )(st => merge(srcA, srcB, st))
-  }
-
-  def ensureMergedPhraseIndex(s: SparkSession, d: String): String =
-    ensureMergedPostingsIndex(s, d, "graft_phrase",
-      writePhraseIndex, mergePhraseIndexes(s, _, _, _))
-
-  def ensureMergedNearIndex(s: SparkSession, d: String): String =
-    ensureMergedPostingsIndex(s, d, "graft_near",
-      writeNearIndex, mergeNearIndexes(s, _, _, _))
-
-  /** Build-if-absent the merged-trigram gate fixture (crawl A =
-    * doc_id % 3 ≠ 2 primary, crawl B = the rest).
-    */
-  def ensureMergedSubstringIndex(s: SparkSession, d: String): String =
-    ensureMergedPostingsIndex(s, d, "graft_trgm",
-      writeSubstringIndex, mergeSubstringIndexes(s, _, _, _))
-
-  /** Floor-bounded retention for the trigram index — the shared
-    * [[graft.index.FoldProtocol.vacuumKinds]] kernel on a postings-
-    * only root: one collapsed bucket-partitioned `c<floor>` holding
-    * the served as-of view, sources and absorbed tombstones
-    * reclaimed, horizons below the floor refusing.
-    */
-  def vacuumSubstringIndex(s: SparkSession, path: String,
-      floorRequested: Long): Boolean =
-    protocol(path).vacuumKinds(s, floorRequested, Seq(
-      "postings" -> ((floor, staging) =>
-        bucketSliced(substringPostings(s, path, Some(floor)))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(staging))))
-
-  /** Build-if-absent the VACUUMED trigram gate fixture: the as-of
-    * ledger layout (seed / b1 / d2) vacuumed at floor 1.
-    */
-  def ensureVacuumedSubstringIndex(s: SparkSession, d: String): String = {
-    val root = fixtureRoot(s, d, "graft_trgm_vacuum")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      protocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/seed"))
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeSubstringIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToSubstringIndex(docs.filter(col("doc_id") % 5 === 4),
-        staging, 1L)
-      deleteFromSubstringIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-      vacuumSubstringIndex(s, staging, 1L)
-    }
-  }
-
-  /** Floor-bounded retention for the positional phrase index — a
-    * [[graft.index.FoldProtocol.vacuumKinds]] adapter like
-    * [[vacuumSubstringIndex]].
-    */
-  def vacuumPhraseIndex(s: SparkSession, path: String,
-      floorRequested: Long): Boolean =
-    protocol(path).vacuumKinds(s, floorRequested, Seq(
-      "postings" -> ((floor, staging) =>
-        bucketSliced(phrasePostings(s, path, Some(floor)))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(staging))))
-
-  /** Floor-bounded retention for the word-positional (NEAR) index. */
-  def vacuumNearIndex(s: SparkSession, path: String,
-      floorRequested: Long): Boolean =
-    protocol(path).vacuumKinds(s, floorRequested, Seq(
-      "postings" -> ((floor, staging) =>
-        bucketSliced(nearPostings(s, path, Some(floor)))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(staging))))
-
-  /** Build-if-absent a VACUUMED gate fixture over the as-of ledger
-    * layout (seed / b1 / d2, vacuumed at floor 1) — shared by the
-    * phrase/NEAR retention gates; `build` stages the three commits,
-    * `vacuum` runs the kind's adapter.
-    */
-  private def ensureVacuumedPostingsIndex(s: SparkSession, d: String,
-      name: String, build: String => Unit,
-      vacuum: String => Boolean): String = {
-    val root = fixtureRoot(s, d, name)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      protocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/seed"))
-    ) { staging => build(staging); vacuum(staging); () }
-  }
-
-  /** Build-if-absent the trigram AS-OF gate fixture (seed / `b1` /
-    * `d2` — the [[ensureAsOfPhraseIndex]] ledger layout).
-    */
-  def ensureAsOfSubstringIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_trgm_asof"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeSubstringIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToSubstringIndex(docs.filter(col("doc_id") % 5 === 4),
-        staging, 1L)
-      deleteFromSubstringIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-    }
 
   // ---- word-positional (unigram) index — proximity / NEAR queries ----
   //   <root>/postings/<sub>/ — (word, doc_id, pos) rows partitioned by
@@ -1469,106 +975,14 @@ object Retrieval {
   //                      span-filtered, so per-position fan-out is
   //                      ≤ (2W-1)^(L-1), a query constant — the
   //                      join-based analog of Lucene's doc-at-a-time
-  //                      position merge). Same FoldProtocol dialect as
-  //                      every other postings index.
-
-  private val WordPosSchema =
-    "word STRING, doc_id BIGINT, pos INT, bucket BIGINT"
+  //                      position merge). The root is the [[Near]]
+  //                      postings kind (the shared lifecycle).
 
   /** One row per token with its position — pure in-row work. */
   private def wordPositions(docs: DataFrame): DataFrame =
     Par.fanOut(docs)
       .select(col("doc_id"),
         posexplode(words(col("text"))).as(Seq("pos", "word")))
-
-  private def writeNearSubRoot(docs: DataFrame, path: String,
-      sub: String): Unit =
-    bucketSliced(wordPositions(docs)
-      .withColumn("bucket", pmod(xxhash64(col("word")), lit(Buckets))))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"${protocol(path).dir("postings")}/$sub")
-
-  /** Build a fresh word-positional index at `path` (seed sub-root). */
-  def writeNearIndex(docs: DataFrame, path: String): Unit =
-    writeNearSubRoot(docs, path, "seed")
-
-  /** Ledgered append — the postings-only fold contract. */
-  def appendToNearIndex(docs: DataFrame, path: String,
-      batchId: Long): Boolean =
-    protocol(path).fold(batchId, Seq("postings")) {
-      writeNearSubRoot(docs, path, s"b$batchId")
-    }
-
-  /** Ledgered document takedown — tombstones only, O(|ids|). */
-  def deleteFromNearIndex(ids: DataFrame, path: String,
-      deleteId: Long): Boolean = {
-    val p = protocol(path)
-    p.delete(deleteId) { p.stageTombstones(ids, "doc_id", deleteId) }
-  }
-
-  private def nearPostings(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = asOf match {
-    case None =>
-      protocol(path).readCommittedStripped(s, "postings", "doc_id")(r =>
-        s.read.schema(WordPosSchema).option("basePath", r).parquet(r))
-    case Some(h) =>
-      protocol(path).readCommittedStrippedAsOf(s, "postings", "doc_id",
-        h)(r =>
-        s.read.schema(WordPosSchema).option("basePath", r).parquet(r))
-  }
-
-  /** Compact the word-positional index: every committed posting
-    * (tombstones already anti-joined away) rewritten as ONE `c<hw>`
-    * dir — the [[compactPhraseIndex]] publish-and-clear on positional
-    * postings (this closes the one lifecycle verb the NEAR index was
-    * missing; fold/delete/serve/as-of already speak the protocol).
-    */
-  def compactNearIndex(s: SparkSession, path: String): Unit = {
-    val p = protocol(path)
-    p.withLease("compact-near") {
-      val cname = p.compactDirName()
-      bucketSliced(nearPostings(s, path))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$path/.postings.compacting/$cname")
-      p.publishDir(".postings.compacting", "postings")
-      p.clearTombstones()
-    }
-  }
-
-  /** Build-if-absent gate fixture (stage-and-publish). */
-  def ensureNearIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_near_index"))(
-      phraseComplete(s, _)) { staging =>
-      writeNearIndex(Tables.documents(s, d), staging)
-    }
-
-  /** Lifecycle fixture: seed, ledgered fold, ledgered takedown. */
-  def ensureEvolvedNearIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_near_evolved"))(
-      r => protocol(r).deletedBatches().contains(1L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeNearIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToNearIndex(docs.filter(col("doc_id") % 5 === 4), staging, 0L)
-      deleteFromNearIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 1L)
-    }
-
-  /** Build-if-absent the word-positional AS-OF gate fixture (seed /
-    * `b1` / `d2` — the [[ensureAsOfPhraseIndex]] ledger layout).
-    */
-  def ensureAsOfNearIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_near_asof"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeNearIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToNearIndex(docs.filter(col("doc_id") % 5 === 4), staging, 1L)
-      deleteFromNearIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-    }
 
   /** The gate's probe NEAR query: three words that co-occur both as
     * the probe phrase and scattered, inside an 8-word window.
@@ -1593,7 +1007,7 @@ object Retrieval {
       "NEAR takes distinct words")
     require(window >= wordsQ.length,
       "window must be at least the word count")
-    val posts = nearPostings(s, indexPath, asOf)
+    val posts = Near.read(s, indexPath, asOf)
     // every leg's bucket from the build's own hash, computed
     // driver-side (LocalHash) — constant word set, zero jobs
     val buckets = wordsQ
@@ -1660,7 +1074,7 @@ object Retrieval {
     require(needle.length >= 3, "substring search needs >= 3 chars")
     val grams = needle.sliding(3).toVector.distinct
     val buckets = graft.functions.LocalHash.bucketsOf(grams, Buckets)
-    substringPostings(s, indexPath, asOf)
+    Trigram.read(s, indexPath, asOf)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("tg").isInCollection(grams))
       .groupBy(col("doc_id"))
@@ -1725,7 +1139,7 @@ object Retrieval {
     val buckets = gramSet
       .select(pmod(xxhash64(col("tg")), lit(Buckets)).as("bucket"))
       .distinct().collect().map(_.getLong(0)).sorted
-    val cands = substringPostings(s, indexPath)
+    val cands = Trigram.read(s, indexPath)
       .filter(col("bucket").isin(buckets: _*))
       .join(gramSet, Seq("tg"), "left_semi")
       .join(qgrams.select(col("query_id"), col("tg")), Seq("tg"))
@@ -1877,7 +1291,7 @@ object Retrieval {
     val ln = lg.groupBy(_._1).map { case (id, g) => (id, g.length.toLong) }
       .toSeq.toDF("lit_id", "nq")
     val buckets = graft.functions.LocalHash.bucketsOf(grams, Buckets)
-    substringPostings(s, indexPath)
+    Trigram.read(s, indexPath)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("tg").isInCollection(grams))
       .join(lgDf, Seq("tg"))
@@ -1951,7 +1365,7 @@ object Retrieval {
     require(minShared >= 1 && minShared <= grams.length,
       s"minShared must be in [1, ${grams.length}]")
     val buckets = graft.functions.LocalHash.bucketsOf(grams, Buckets)
-    substringPostings(s, indexPath)
+    Trigram.read(s, indexPath)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("tg").isInCollection(grams))
       .groupBy(col("doc_id"))
@@ -2067,8 +1481,10 @@ object Retrieval {
   // (re-deleting is idempotent) and each index alone never serves a
   // victim once ITS delete commits.
 
-  /** The four doc-index kinds a sweep covers, as (kind, sub-dir). */
-  private val SweepKinds: Seq[String] = Seq("bm25", "near", "phrase", "trgm")
+  /** The four doc-index kinds a sweep covers, each under its `name`
+    * sub-dir.
+    */
+  private val SweepKinds: Seq[PostingsKind] = Seq(Bm25, Near, Phrase, Trigram)
 
   /** Tombstone `ids` in all four indexes under `root`/<kind> with one
     * deleteId. Returns the kinds whose delete committed NOW (an
@@ -2076,11 +1492,9 @@ object Retrieval {
     * untouched).
     */
   def takedownSweep(s: SparkSession, ids: DataFrame, root: String,
-      deleteId: Long): Map[String, Boolean] = Map(
-    "bm25" -> deleteFromBm25Index(ids, s"$root/bm25", deleteId),
-    "near" -> deleteFromNearIndex(ids, s"$root/near", deleteId),
-    "phrase" -> deleteFromPhraseIndex(ids, s"$root/phrase", deleteId),
-    "trgm" -> deleteFromSubstringIndex(ids, s"$root/trgm", deleteId))
+      deleteId: Long): Map[String, Boolean] =
+    SweepKinds.map(k =>
+      k.name -> k.delete(ids, s"$root/${k.name}", deleteId)).toMap
 
   /** Gate fixture: all four indexes over the full corpus inside ONE
     * published root, then one sweep of doc_id % 11 = 5 — so the gate
@@ -2089,13 +1503,10 @@ object Retrieval {
   def ensureSweepFixture(s: SparkSession, d: String): String =
     Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_sweep"))(r =>
       SweepKinds.forall(k =>
-        protocol(s"$r/$k").deletedBatches().contains(0L))
+        protocol(s"$r/${k.name}").deletedBatches().contains(0L))
     ) { staging =>
       val docs = Tables.documents(s, d)
-      writeBm25Index(docs, s"$staging/bm25")
-      writeNearIndex(docs, s"$staging/near")
-      writePhraseIndex(docs, s"$staging/phrase")
-      writeSubstringIndex(docs, s"$staging/trgm")
+      SweepKinds.foreach(k => k.write(docs, s"$staging/${k.name}"))
       takedownSweep(s, docs.filter(col("doc_id") % 11 === 5)
         .select(col("doc_id")), staging, 0L)
     }
@@ -2106,7 +1517,8 @@ object Retrieval {
     * sweep can leave kinds at different horizons).
     */
   def sweptDeleteIds(root: String): Set[Long] =
-    SweepKinds.flatMap(k => protocol(s"$root/$k").deletedBatches()).toSet
+    SweepKinds.flatMap(k =>
+      protocol(s"$root/${k.name}").deletedBatches()).toSet
 
   /** The post-sweep audit, one row per index kind: the count of
     * SERVABLE postings (committed minus tombstoned). Victims
@@ -2115,15 +1527,10 @@ object Retrieval {
     * them, so a tombstone leaking anywhere breaks the hash match.
     */
   def takedownAudit(s: SparkSession, root: String): DataFrame =
-    Seq(
-      "bm25" -> indexPostings(s, s"$root/bm25"),
-      "near" -> nearPostings(s, s"$root/near"),
-      "phrase" -> phrasePostings(s, s"$root/phrase"),
-      "trgm" -> substringPostings(s, s"$root/trgm"))
-      .map { case (k, posts) =>
-        posts.agg(count(lit(1)).as("n_postings"))
-          .select(lit(k).as("kind"), col("n_postings"))
-      }
+    SweepKinds
+      .map(k => k.read(s, s"$root/${k.name}")
+        .agg(count(lit(1)).as("n_postings"))
+        .select(lit(k.name).as("kind"), col("n_postings")))
       .reduce(_.union(_))
       .orderBy(col("kind"))
 
@@ -2195,16 +1602,13 @@ object Retrieval {
   def ensureSweepAllFixture(s: SparkSession, d: String): String =
     Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_sweep_all"))(r =>
       SweepKinds.forall(k =>
-        protocol(s"$r/$k").deletedBatches().contains(0L)) &&
+        protocol(s"$r/${k.name}").deletedBatches().contains(0L)) &&
         Similarity.protocol(s"$r/ann").deletedBatches().contains(0L) &&
         Multimodal.phashProtocol(s"$r/phash").deletedBatches()
           .contains(0L)
     ) { staging =>
       val docs = Tables.documents(s, d)
-      writeBm25Index(docs, s"$staging/bm25")
-      writeNearIndex(docs, s"$staging/near")
-      writePhraseIndex(docs, s"$staging/phrase")
-      writeSubstringIndex(docs, s"$staging/trgm")
+      SweepKinds.foreach(k => k.write(docs, s"$staging/${k.name}"))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").as("v"))
       Similarity.writeIvfIndex(e, s"$staging/ann")
@@ -2529,14 +1933,14 @@ object Retrieval {
     },
     // Cross-root MERGE under the value gate: two independently-built
     // roots (crawl A = doc_id % 3 ≠ 2, crawl B = the rest) unioned by
-    // mergeBm25Indexes — postings copied bucket-aligned, stats folded
+    // PostingsKind.merge — postings copied bucket-aligned, stats folded
     // as mergeable sums, df re-aggregated at serve time. Disjoint doc
     // spaces make the merged serve EXACTLY the from-scratch build over
     // the union corpus, so this reuses text_bm25's oracle verbatim:
     // the merge changes cost, not one row. ANN counterpart:
     // sim_ivf_merged.
     QuerySpec("text_bm25_merged", bm25OracleSql) { (s, d) =>
-      bm25TopK(s, ensureMergedBm25Index(s, d))
+      bm25TopK(s, Bm25.ensure(s, d, Scenario.Merged))
     },
     // Boolean retrieval (must / should / must-not) off the SAME
     // persisted inverted index — hard conjunction + negation, ranked by
@@ -2561,7 +1965,7 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, *
          |FROM (${boolOracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureAsOfBm25Index(s, d)
+      val idx = Bm25.ensure(s, d, Scenario.AsOf)
       Par.buildAll(Seq(0L, 1L, 2L)) { h =>
         booleanSearch(s, idx, asOf = Some(h))
           .select(lit(h).as("horizon"), col("query_id"), col("doc_id"),
@@ -2573,13 +1977,13 @@ object Retrieval {
     // text re-scan — the capability BM25's bag-of-words index cannot
     // express (term adjacency).
     QuerySpec("text_phrase", phraseOracleSql) { (s, d) =>
-      phraseTopK(s, ensurePhraseIndex(s, d), ProbePhrase)
+      phraseTopK(s, Phrase.ensure(s, d, Scenario.Index), ProbePhrase)
     },
-    // Cross-root phrase MERGE — the shared postings-only union kernel
-    // (mergePostingsRoots) on positional bigram postings; reuses
+    // Cross-root phrase MERGE — the shared union kernel
+    // (PostingsKind.merge) on positional bigram postings; reuses
     // text_phrase's oracle verbatim.
     QuerySpec("text_phrase_merged", phraseOracleSql) { (s, d) =>
-      phraseTopK(s, ensureMergedPhraseIndex(s, d), ProbePhrase)
+      phraseTopK(s, Phrase.ensure(s, d, Scenario.Merged), ProbePhrase)
     },
     // The positional index's whole FoldProtocol lifecycle under one
     // value gate: seed, ledgered append, ledgered takedown — the serve
@@ -2588,13 +1992,13 @@ object Retrieval {
     // the BM25 index).
     QuerySpec("text_phrase_evolved",
       phraseOracleSqlOver("doc_id % 7 <> 3")) { (s, d) =>
-      phraseTopK(s, ensureEvolvedPhraseIndex(s, d), ProbePhrase)
+      phraseTopK(s, Phrase.ensure(s, d, Scenario.Evolved), ProbePhrase)
     },
     // Many phrases, one distributed job: one bucket prune for the
     // whole batch, per-query rankings via the bounded top_k aggregate.
     QuerySpec("text_phrase_multi", phraseMultiOracleSql) { (s, d) =>
       import s.implicits._
-      phraseBatch(s, ensurePhraseIndex(s, d),
+      phraseBatch(s, Phrase.ensure(s, d, Scenario.Index),
         PhraseQueries.toDF("query_id", "phrase"))
     },
     // Substring (grep) search from the persisted trigram index: the
@@ -2603,7 +2007,7 @@ object Retrieval {
     // bucket-pruned trigram intersection plus a candidate-restricted
     // exact verify; the oracle greps the corpus directly.
     QuerySpec("text_substring", substringOracleSqlOver("1 = 1")) {
-      (s, d) => substringSearch(s, ensureSubstringIndex(s, d),
+      (s, d) => substringSearch(s, Trigram.ensure(s, d, Scenario.Index),
         Tables.documents(s, d), ProbeNeedle)
     },
     // Cross-root trigram MERGE under the value gate — the third index
@@ -2613,7 +2017,7 @@ object Retrieval {
     // make the merged serve exactly the from-scratch union build).
     QuerySpec("text_substring_merged",
       substringOracleSqlOver("1 = 1")) { (s, d) =>
-      substringSearch(s, ensureMergedSubstringIndex(s, d),
+      substringSearch(s, Trigram.ensure(s, d, Scenario.Merged),
         Tables.documents(s, d), ProbeNeedle)
     },
     // The trigram index's FoldProtocol lifecycle under one value gate:
@@ -2621,7 +2025,7 @@ object Retrieval {
     // grepping a corpus that never contained the deleted docs.
     QuerySpec("text_substring_evolved",
       substringOracleSqlOver("doc_id % 7 <> 3")) { (s, d) =>
-      substringSearch(s, ensureEvolvedSubstringIndex(s, d),
+      substringSearch(s, Trigram.ensure(s, d, Scenario.Evolved),
         Tables.documents(s, d), ProbeNeedle)
     },
     // Many needles, one distributed job: one bucket prune + ONE
@@ -2629,7 +2033,7 @@ object Retrieval {
     QuerySpec("text_substring_multi", substringMultiOracleSql) {
       (s, d) =>
       import s.implicits._
-      substringBatch(s, ensureSubstringIndex(s, d),
+      substringBatch(s, Trigram.ensure(s, d, Scenario.Index),
         Tables.documents(s, d), NeedleQueries.toDF("query_id", "needle"))
     },
     // Regex (grep -E) search from the SAME persisted trigram index:
@@ -2638,7 +2042,7 @@ object Retrieval {
     // necessary-condition prune), and only candidates meet the real
     // regex engine; the oracle regexes the corpus directly.
     QuerySpec("text_regex", regexOracleSql) { (s, d) =>
-      regexSearch(s, ensureSubstringIndex(s, d),
+      regexSearch(s, Trigram.ensure(s, d, Scenario.Index),
         Tables.documents(s, d), ProbeRegex)
     },
     // Fuzzy (edit-distance <= 1) term search from the trigram index:
@@ -2647,7 +2051,7 @@ object Retrieval {
     // bound, so the prune is lossless), levenshtein verifies only the
     // candidates; the oracle scores every token of every doc.
     QuerySpec("text_fuzzy", fuzzyOracleSql) { (s, d) =>
-      fuzzySearch(s, ensureSubstringIndex(s, d),
+      fuzzySearch(s, Trigram.ensure(s, d, Scenario.Index),
         Tables.documents(s, d), FuzzyTerm, FuzzyMaxDist)
     },
     // Prefix (wildcard) term search — the autocomplete query class:
@@ -2665,7 +2069,7 @@ object Retrieval {
         |SELECT prefix, doc_id, CAST(count(*) AS BIGINT) AS tf,
         |  CAST(count(DISTINCT w) AS BIGINT) AS n_variants
         |FROM m GROUP BY prefix, doc_id""".stripMargin) { (s, d) =>
-      val idx = ensureSubstringIndex(s, d)
+      val idx = Trigram.ensure(s, d, Scenario.Index)
       val docs = Tables.documents(s, d)
       prefixSearch(s, idx, docs, "sca")
         .unionByName(prefixSearch(s, idx, docs, "da"))
@@ -2684,7 +2088,7 @@ object Retrieval {
         |SELECT suffix, doc_id, CAST(count(*) AS BIGINT) AS tf,
         |  CAST(count(DISTINCT w) AS BIGINT) AS n_variants
         |FROM m GROUP BY suffix, doc_id""".stripMargin) { (s, d) =>
-      val idx = ensureSubstringIndex(s, d)
+      val idx = Trigram.ensure(s, d, Scenario.Index)
       val docs = Tables.documents(s, d)
       suffixSearch(s, idx, docs, "ter")
         .unionByName(suffixSearch(s, idx, docs, "ow"))
@@ -2715,7 +2119,7 @@ object Retrieval {
     // only) index can answer; minimal covering span + window count,
     // integer-exact in both engines.
     QuerySpec("text_near", nearOracleSqlOver("1 = 1")) { (s, d) =>
-      nearSearch(s, ensureNearIndex(s, d), NearWords, NearWindow)
+      nearSearch(s, Near.ensure(s, d, Scenario.Index), NearWords, NearWindow)
     },
     // Cross-root NEAR MERGE — the postings-only union kernel on
     // word-positional postings. With this, every bucketed postings
@@ -2723,20 +2127,20 @@ object Retrieval {
     // the IVF vector family speak cross-root union; reuses
     // text_near's oracle verbatim.
     QuerySpec("text_near_merged", nearOracleSqlOver("1 = 1")) { (s, d) =>
-      nearSearch(s, ensureMergedNearIndex(s, d), NearWords, NearWindow)
+      nearSearch(s, Near.ensure(s, d, Scenario.Merged), NearWords, NearWindow)
     },
     // The word-positional index's FoldProtocol lifecycle under one
     // value gate: seed, ledgered append, ledgered takedown.
     QuerySpec("text_near_evolved",
       nearOracleSqlOver("doc_id % 7 <> 3")) { (s, d) =>
-      nearSearch(s, ensureEvolvedNearIndex(s, d), NearWords, NearWindow)
+      nearSearch(s, Near.ensure(s, d, Scenario.Evolved), NearWords, NearWindow)
     },
     // The incremental fold under the value gate: history-seeded index +
     // one ledgered append must serve the exact full-corpus answer (df,
     // avgdl and N all shift with the appended wave — any drift in the
     // merged stats or a miscommitted b-dir breaks the hash match).
     QuerySpec("text_bm25_grown", bm25OracleSql) { (s, d) =>
-      bm25TopK(s, ensureGrownBm25Index(s, d))
+      bm25TopK(s, Bm25.ensure(s, d, Scenario.Grown))
     },
     // The takedown contract under the value gate: after one ledgered
     // delete batch (doc_id % 7 = 3), the served ranking must be
@@ -2746,7 +2150,7 @@ object Retrieval {
     // so any drift in the delete protocol breaks the hash match.
     QuerySpec("text_bm25_deleted",
       bm25OracleSqlOver("doc_id % 7 <> 3")) { (s, d) =>
-      bm25TopK(s, ensureDeletedBm25Index(s, d))
+      bm25TopK(s, Bm25.ensure(s, d, Scenario.Deleted))
     },
     // The whole index lifecycle under ONE value gate: seed, ledgered
     // append, ledgered delete whose victims span both waves. Serving
@@ -2757,7 +2161,7 @@ object Retrieval {
     // text_bm25_deleted by design (history ∪ append = full corpus).
     QuerySpec("text_bm25_evolved",
       bm25OracleSqlOver("doc_id % 7 <> 3")) { (s, d) =>
-      bm25TopK(s, ensureEvolvedBm25Index(s, d))
+      bm25TopK(s, Bm25.ensure(s, d, Scenario.Evolved))
     },
 
     // AS-OF (time-travel) BM25 — the inverted-index twin of
@@ -2777,7 +2181,7 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, score
          |FROM (${bm25OracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureAsOfBm25Index(s, d)
+      val idx = Bm25.ensure(s, d, Scenario.AsOf)
       Par.buildAll(Seq(0L, 1L, 2L)) { h =>
         bm25TopK(s, idx, asOf = Some(h))
           .select(lit(h).as("horizon"), col("doc_id"), col("score"))
@@ -2798,7 +2202,7 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, score
          |FROM (${bm25OracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureVacuumedBm25Index(s, d)
+      val idx = Bm25.ensure(s, d, Scenario.Vacuumed)
       Par.buildAll(Seq(1L, 2L)) { h =>
         bm25TopK(s, idx, asOf = Some(h))
           .select(lit(h).as("horizon"), col("doc_id"), col("score"))
@@ -2824,7 +2228,7 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, score
          |FROM (${bm25OracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureMergedAsOfBm25Index(s, d)
+      val idx = Bm25.ensure(s, d, Scenario.MergedAsOf)
       Par.buildAll(Seq(0L, 1L, 2L)) { h =>
         bm25TopK(s, idx, asOf = Some(h))
           .select(lit(h).as("horizon"), col("doc_id"), col("score"))
@@ -2847,7 +2251,7 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, n_hits, first_pos
          |FROM (${phraseOracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureAsOfPhraseIndex(s, d)
+      val idx = Phrase.ensure(s, d, Scenario.AsOf)
       Par.buildAll(Seq(0L, 1L, 2L)) { h =>
         phraseTopK(s, idx, ProbePhrase, asOf = Some(h))
           .select(lit(h).as("horizon"), col("doc_id"),
@@ -2866,15 +2270,7 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, n_hits, first_pos
          |FROM (${phraseOracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureVacuumedPostingsIndex(s, d, "graft_phrase_vacuum",
-        st => {
-          val docs = Tables.documents(s, d)
-          writePhraseIndex(docs.filter(col("doc_id") % 5 =!= 4), st)
-          appendToPhraseIndex(docs.filter(col("doc_id") % 5 === 4), st, 1L)
-          deleteFromPhraseIndex(docs.filter(col("doc_id") % 7 === 3)
-            .select(col("doc_id")), st, 2L)
-        },
-        vacuumPhraseIndex(s, _, 1L))
+      val idx = Phrase.ensure(s, d, Scenario.Vacuumed)
       Par.buildAll(Seq(1L, 2L)) { h =>
         phraseTopK(s, idx, ProbePhrase, asOf = Some(h))
           .select(lit(h).as("horizon"), col("doc_id"),
@@ -2892,15 +2288,7 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, best_span, n_windows
          |FROM (${nearOracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureVacuumedPostingsIndex(s, d, "graft_near_vacuum",
-        st => {
-          val docs = Tables.documents(s, d)
-          writeNearIndex(docs.filter(col("doc_id") % 5 =!= 4), st)
-          appendToNearIndex(docs.filter(col("doc_id") % 5 === 4), st, 1L)
-          deleteFromNearIndex(docs.filter(col("doc_id") % 7 === 3)
-            .select(col("doc_id")), st, 2L)
-        },
-        vacuumNearIndex(s, _, 1L))
+      val idx = Near.ensure(s, d, Scenario.Vacuumed)
       Par.buildAll(Seq(1L, 2L)) { h =>
         nearSearch(s, idx, NearWords, NearWindow, asOf = Some(h))
           .select(lit(h).as("horizon"), col("doc_id"),
@@ -2922,7 +2310,7 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, n_occ
          |FROM (${substringOracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureAsOfSubstringIndex(s, d)
+      val idx = Trigram.ensure(s, d, Scenario.AsOf)
       val docs = Tables.documents(s, d)
       Par.buildAll(Seq(0L, 1L, 2L)) { h =>
         substringSearch(s, idx, docs, ProbeNeedle, asOf = Some(h))
@@ -2941,7 +2329,7 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, n_occ
          |FROM (${substringOracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureVacuumedSubstringIndex(s, d)
+      val idx = Trigram.ensure(s, d, Scenario.Vacuumed)
       val docs = Tables.documents(s, d)
       Par.buildAll(Seq(1L, 2L)) { h =>
         substringSearch(s, idx, docs, ProbeNeedle, asOf = Some(h))
@@ -2963,7 +2351,7 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, best_span, n_windows
          |FROM (${nearOracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureAsOfNearIndex(s, d)
+      val idx = Near.ensure(s, d, Scenario.AsOf)
       Par.buildAll(Seq(0L, 1L, 2L)) { h =>
         nearSearch(s, idx, NearWords, NearWindow, asOf = Some(h))
           .select(lit(h).as("horizon"), col("doc_id"),
@@ -2987,8 +2375,8 @@ object Retrieval {
     // compacted past the horizon ⇒ the whole matrix serve refuses)
     // is pinned in AsOfIndexSpec.
     QuerySpec("q_asof_matrix", asofMatrixOracleSql) { (s, d) =>
-      val bmIdx = ensureAsOfBm25Index(s, d)
-      val subIdx = ensureAsOfSubstringIndex(s, d)
+      val bmIdx = Bm25.ensure(s, d, Scenario.AsOf)
+      val subIdx = Trigram.ensure(s, d, Scenario.AsOf)
       val annIdx = Similarity.ensureAsOfIvfIndex(s, d)
       val qd = s.read.parquet(ensureDenseQuery(s, d))
       val docs = Tables.documents(s, d)
@@ -3009,8 +2397,8 @@ object Retrieval {
     // gets the same fused surface back; one leg's honesty refusal
     // refuses the whole matrix, same as q_asof_matrix.
     QuerySpec("q_asof_matrix_pq", asofMatrixPqOracleSql) { (s, d) =>
-      val bmIdx = ensureAsOfBm25Index(s, d)
-      val subIdx = ensureAsOfSubstringIndex(s, d)
+      val bmIdx = Bm25.ensure(s, d, Scenario.AsOf)
+      val subIdx = Trigram.ensure(s, d, Scenario.AsOf)
       val pqIdx = Similarity.ensureEvolvedIvfPqIndex(s, d)
       val qd = s.read.parquet(ensureDenseQuery(s, d))
       val docs = Tables.documents(s, d)
@@ -3094,7 +2482,7 @@ object Retrieval {
       val candBuckets = cand
         .select(pmod(xxhash64(col("word")), lit(Buckets)).as("bucket"))
         .distinct().collect().map(_.getLong(0)).sorted
-      val cdf = indexPostings(s, idx)
+      val cdf = Bm25.read(s, idx)
         .filter(col("bucket").isin(candBuckets: _*))
         .join(cand.select(col("word")), Seq("word"), "left_semi")
         .groupBy(col("word")).agg(count(lit(1)).cast("double").as("df"))

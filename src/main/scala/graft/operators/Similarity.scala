@@ -587,7 +587,7 @@ object Similarity {
   def mergeIvfIndexes(s: SparkSession, primary: String,
       secondary: String, dest: String): Unit = {
     // Resolve dest's kinds through the manifest like the other merge
-    // kernels (mergeBm25Indexes/mergePostingsRoots): identical for a
+    // kernels (`Retrieval.PostingsKind.merge`): identical for a
     // fresh staging dest, but an in-place dest whose kinds were ever
     // published onto generations must land in the SERVED generation.
     s.read.parquet(protocol(primary).dir("cents"))
@@ -1958,7 +1958,7 @@ object Similarity {
 
   /** Floor-bounded retention for the IVF index — the vector-family
     * member of the vacuum trio (`TimeTravel.vacuum` for base tables,
-    * `Retrieval.vacuumBm25Index` for postings): collapse the vector
+    * `Retrieval.PostingsKind.vacuum` for postings): collapse the vector
     * sub-roots with ledger id ≤ `floor` into ONE cell-partitioned
     * `c<floor>` dir holding the SERVED as-of-floor view (tombstones ≤
     * floor stripped — the collapse doubles as their physical purge),
@@ -3478,7 +3478,7 @@ object Similarity {
     // VACUUMED at floor 1 — horizon 0 reclaimed (refuses), horizons 1
     // and 2 must serve hash-equal to the unvacuumed construction
     // (oracle = sim_ivf_asof's surviving branches verbatim). With
-    // TimeTravel.vacuum and vacuumBm25Index this makes retention a
+    // TimeTravel.vacuum and PostingsKind.vacuum this makes retention a
     // kind-generic protocol feature, not a per-index special case.
     QuerySpec(
       "sim_ivf_vacuum",

@@ -83,7 +83,7 @@ object TimeTravel {
 
   /** Build-if-absent the ledgered-events gate fixture — four commits
     * with DISTINCT ledger ids so every id is a distinguishable
-    * horizon (the `ensureAsOfBm25Index` convention):
+    * horizon (the `Retrieval.Scenario.AsOf` convention):
     *   seed (id 0): initial load, event_id % 3 = 0
     *   b1: append, event_id % 3 = 1
     *   b2: upsert — inserts event_id % 3 = 2 AND re-emits

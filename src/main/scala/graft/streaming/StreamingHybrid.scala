@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * so replay idempotence needs no ledger: a redelivered batchId
   * rewrites its own output directory wholesale. Empty batches are
   * suppressed (K3). Index GROWTH stays with the per-index ingest
-  * streams (`StreamingRetrieval.startIngest`,
+  * streams (`StreamingRetrieval.startIngest(Retrieval.Bm25, ...)`,
   * `StreamingSimilarity.startIngest`) — the next search batch
   * automatically fuses over whatever both ledgers have committed.
   */

@@ -22,7 +22,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * ledger: a redelivered batchId rewrites its own output directory
   * (overwrite semantics), the `StreamingSimilarity.start` contract.
   * The ingest side MUTATES the index and therefore commits through
-  * the index's batch ledger (`Retrieval.appendToBm25Index`).
+  * the index's batch ledger ([[startIngest]], one start for every
+  * postings kind).
   */
 object StreamingRetrieval {
 
@@ -50,30 +51,30 @@ object StreamingRetrieval {
       .write.mode(SaveMode.Overwrite).parquet(s"$outPath/b$batchId")
   }
 
-  /** The WRITE side: fold micro-batches of NEW documents into the
-    * persisted BM25 index — `Retrieval.appendToBm25Index` per batch
-    * (tokenize the BATCH only; postings + mergeable stats land in a
-    * ledgered `b<batchId>/` sub-root), exactly-once under replay via
-    * the index ledger. The NEXT search batch automatically ranks over
-    * the grown corpus with its df/N/avgdl shifted accordingly.
-    * Maintenance every `compactEvery` batches via
+  /** The WRITE side, for any postings kind (BM25, phrase, trigram,
+    * NEAR): fold micro-batches of NEW documents into the persisted
+    * index — `kind.append` per batch (tokenize the BATCH only; its
+    * sides land in a ledgered `b<batchId>/` sub-root), exactly-once
+    * under replay via the index ledger. The NEXT search batch
+    * automatically serves the grown corpus (for BM25 with df/N/avgdl
+    * shifted accordingly). Maintenance every `compactEvery` batches via
     * [[IngestMaintenance]]: compact-all by default, or — with
     * `retainCommits` ≥ 1 — a floor-bounded vacuum holding the newest
     * `retainCommits` commits as-of-readable.
     */
-  def startIngest(docs: DataFrame, indexPath: String,
-      checkpoint: String, compactEvery: Int = 16,
+  def startIngest(kind: Retrieval.PostingsKind, docs: DataFrame,
+      indexPath: String, checkpoint: String, compactEvery: Int = 16,
       retainCommits: Int = 0): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          Retrieval.appendToBm25Index(batch, indexPath, batchId)
+          kind.append(batch, indexPath, batchId)
           IngestMaintenance.run(Retrieval.protocol(indexPath), batchId,
             compactEvery, retainCommits)(
-            Retrieval.compactBm25Index(batch.sparkSession, indexPath))(
-            Retrieval.vacuumBm25Index(batch.sparkSession, indexPath, _))
+            kind.compact(batch.sparkSession, indexPath))(
+            kind.vacuum(batch.sparkSession, indexPath, _))
         }
       }
       .start()
@@ -102,29 +103,6 @@ object StreamingRetrieval {
       .write.mode(SaveMode.Overwrite).parquet(s"$outPath/b$batchId")
   }
 
-  /** Fold micro-batches of NEW documents into the positional index —
-    * `Retrieval.appendToPhraseIndex` per batch (pair postings of the
-    * BATCH only land in a ledgered `b<batchId>/` sub-root),
-    * exactly-once under replay via the index ledger; ledger-gated
-    * periodic compaction, same as [[startIngest]].
-    */
-  def startPhraseIngest(docs: DataFrame, indexPath: String,
-      checkpoint: String, compactEvery: Int = 16,
-      retainCommits: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          Retrieval.appendToPhraseIndex(batch, indexPath, batchId)
-          IngestMaintenance.run(Retrieval.protocol(indexPath), batchId,
-            compactEvery, retainCommits)(
-            Retrieval.compactPhraseIndex(batch.sparkSession, indexPath))(
-            Retrieval.vacuumPhraseIndex(batch.sparkSession, indexPath, _))
-        }
-      }
-      .start()
-
   /** Streaming SUBSTRING (grep) search against the persisted trigram
     * index — `Retrieval.substringBatch` per micro-batch of
     * `(query_id, needle)`: one static bucket PartitionFilter + one
@@ -150,27 +128,6 @@ object StreamingRetrieval {
     Retrieval.substringBatch(batch.sparkSession, indexPath, docs, batch)
       .write.mode(SaveMode.Overwrite).parquet(s"$outPath/b$batchId")
   }
-
-  /** Fold micro-batches of NEW documents into the trigram index —
-    * ledgered postings-only folds with ledger-gated periodic
-    * compaction via the shared [[Retrieval.compactSubstringIndex]].
-    */
-  def startSubstringIngest(docs: DataFrame, indexPath: String,
-      checkpoint: String, compactEvery: Int = 16,
-      retainCommits: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          Retrieval.appendToSubstringIndex(batch, indexPath, batchId)
-          IngestMaintenance.run(Retrieval.protocol(indexPath), batchId,
-            compactEvery, retainCommits)(
-            Retrieval.compactSubstringIndex(batch.sparkSession, indexPath))(
-            Retrieval.vacuumSubstringIndex(batch.sparkSession, indexPath, _))
-        }
-      }
-      .start()
 
   // ---- streaming serves for the remaining retrieval classes ----
   // NEAR / regex / fuzzy / prefix complete the streaming-serve

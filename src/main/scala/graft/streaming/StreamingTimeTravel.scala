@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * [[graft.operators.TimeTravel.appendCommit]], so the table's as-of
   * read ([[graft.operators.TimeTravel.readEventsAsOf]]) can replay the
   * stream's history at any commit boundary — the base-table analogue
-  * of `StreamingRetrieval.startIngest`'s index folds, closing the
+  * of `StreamingRetrieval.startIngest`'s postings-index folds, closing the
   * time-travel lifecycle the same way every index kind's is closed
   * (build / grow / delete / serve / as-of / streaming).
   *
@@ -73,7 +73,7 @@ object StreamingTimeTravel {
           // the resolved state once (read c_prev + the window's
           // batches, write c_new), so every-batch runs would make
           // ingest O(table) per micro-batch — the compactEvery
-          // convention of StreamingRetrieval.startIngest.
+          // convention of StreamingRetrieval.startIngest (any postings kind).
           val ids = TimeTravel.protocol(root).allLedgerIds().toSeq
             .sorted(Ordering[Long].reverse)
           if (vacuumEvery > 0 && batchId % vacuumEvery == vacuumEvery - 1

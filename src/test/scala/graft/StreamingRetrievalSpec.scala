@@ -65,7 +65,7 @@ class StreamingRetrievalSpec extends SparkSpec {
     // full corpus, merged into one servable root (seed + b0). The
     // stream path reads it through the same committed-dirs resolution
     // as any single-crawl root — nothing merge-specific to configure.
-    val idx = Retrieval.ensureMergedBm25Index(spark, sf0001)
+    val idx = Retrieval.Bm25.ensure(spark, sf0001, Retrieval.Scenario.Merged)
     val out = tmpDir("sbm25m-out")
     val ckpt = tmpDir("sbm25m-ckpt")
     val in = MemoryStream[(Long, Seq[String])]
@@ -99,8 +99,9 @@ class StreamingRetrievalSpec extends SparkSpec {
     "a replayed batchId rewrites rather than duplicates") {
     implicit val sc = spark.sqlContext
     val docs = Tables.documents(spark, sf0001)
-    val nearIdx = Retrieval.ensureNearIndex(spark, sf0001)
-    val trgmIdx = Retrieval.ensureSubstringIndex(spark, sf0001)
+    val nearIdx = Retrieval.Near.ensure(spark, sf0001, Retrieval.Scenario.Index)
+    val trgmIdx = Retrieval.Trigram.ensure(spark, sf0001,
+      Retrieval.Scenario.Index)
 
     // NEAR: two word-set queries across two micro-batches
     val nearQs = Seq(0L -> Retrieval.NearWords, 1L -> Seq("table", "scan"))
@@ -230,8 +231,9 @@ class StreamingRetrievalSpec extends SparkSpec {
     "serve at every horizon, and a replayed batchId rewrites rather " +
     "than duplicates") {
     implicit val sc = spark.sqlContext
-    val bmIdx = Retrieval.ensureAsOfBm25Index(spark, sf0001)
-    val subIdx = Retrieval.ensureAsOfSubstringIndex(spark, sf0001)
+    val bmIdx = Retrieval.Bm25.ensure(spark, sf0001, Retrieval.Scenario.AsOf)
+    val subIdx = Retrieval.Trigram.ensure(spark, sf0001,
+      Retrieval.Scenario.AsOf)
     val annIdx = graft.operators.Similarity.ensureAsOfIvfIndex(spark, sf0001)
     val qPath = Retrieval.ensureDenseQuery(spark, sf0001)
     val docs = Tables.documents(spark, sf0001)
@@ -287,7 +289,7 @@ class StreamingRetrievalSpec extends SparkSpec {
       .sortBy(_._1)
 
     val in = MemoryStream[(Long, String, String, String, Long)]
-    val q = StreamingRetrieval.startIngest(
+    val q = StreamingRetrieval.startIngest(Retrieval.Bm25,
       in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       idx, tmpDir("bm25-ingest-ckpt"), compactEvery = 2)
     try {
@@ -331,7 +333,7 @@ class StreamingRetrievalSpec extends SparkSpec {
     for (m <- 1 to 3)
       Retrieval.appendToBm25Index(wave(m), replica, (m - 1).toLong)
     val in = MemoryStream[(Long, String, String, String, Long)]
-    val q = StreamingRetrieval.startIngest(
+    val q = StreamingRetrieval.startIngest(Retrieval.Bm25,
       in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       idx, tmpDir("bm25-retained-ckpt"), compactEvery = 1,
       retainCommits = 2)
@@ -373,7 +375,7 @@ class StreamingRetrievalSpec extends SparkSpec {
 
     // search side: serve from a full persisted index
     val idx = tmpDir("phrase-stream-idx")
-    Retrieval.writePhraseIndex(docs, idx)
+    Retrieval.Phrase.write(docs, idx)
     val out = tmpDir("sphrase-out")
     val in = MemoryStream[(Long, String)]
     val q = StreamingRetrieval.startPhrase(
@@ -397,13 +399,13 @@ class StreamingRetrievalSpec extends SparkSpec {
 
     // ingest side: half-seeded index grows to the full-corpus answer
     val grown = tmpDir("phrase-stream-grown")
-    Retrieval.writePhraseIndex(docs.filter($"doc_id" % 2 === 0), grown)
+    Retrieval.Phrase.write(docs.filter($"doc_id" % 2 === 0), grown)
     val newDocs = docs.filter($"doc_id" % 2 === 1)
       .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
       .as[(Long, String, String, String, Long)].collect().toSeq
       .sortBy(_._1)
     val din = MemoryStream[(Long, String, String, String, Long)]
-    val dq = StreamingRetrieval.startPhraseIngest(
+    val dq = StreamingRetrieval.startIngest(Retrieval.Phrase,
       din.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       grown, tmpDir("phrase-stream-grown-ckpt"), compactEvery = 2)
     try {
@@ -437,7 +439,7 @@ class StreamingRetrievalSpec extends SparkSpec {
 
     // search side: serve from a full persisted index
     val idx = tmpDir("trgm-stream-idx")
-    Retrieval.writeSubstringIndex(docs, idx)
+    Retrieval.Trigram.write(docs, idx)
     val out = tmpDir("strgm-out")
     val in = MemoryStream[(Long, String)]
     val q = StreamingRetrieval.startSubstring(
@@ -466,13 +468,13 @@ class StreamingRetrievalSpec extends SparkSpec {
     // ingest side: half-seeded index grows to the full-corpus answer,
     // compaction folds the postings into one c-dir
     val grown = tmpDir("trgm-stream-grown")
-    Retrieval.writeSubstringIndex(docs.filter($"doc_id" % 2 === 0), grown)
+    Retrieval.Trigram.write(docs.filter($"doc_id" % 2 === 0), grown)
     val newDocs = docs.filter($"doc_id" % 2 === 1)
       .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
       .as[(Long, String, String, String, Long)].collect().toSeq
       .sortBy(_._1)
     val din = MemoryStream[(Long, String, String, String, Long)]
-    val dq = StreamingRetrieval.startSubstringIngest(
+    val dq = StreamingRetrieval.startIngest(Retrieval.Trigram,
       din.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       grown, tmpDir("trgm-stream-grown-ckpt"), compactEvery = 2)
     try {
@@ -503,9 +505,9 @@ class StreamingRetrievalSpec extends SparkSpec {
       .select($"doc_id", $"text")
     val root = tmpDir("ssweep")
     Retrieval.writeBm25Index(docs, s"$root/bm25")
-    Retrieval.writeNearIndex(docs, s"$root/near")
-    Retrieval.writePhraseIndex(docs, s"$root/phrase")
-    Retrieval.writeSubstringIndex(docs, s"$root/trgm")
+    Retrieval.Near.write(docs, s"$root/near")
+    Retrieval.Phrase.write(docs, s"$root/phrase")
+    Retrieval.Trigram.write(docs, s"$root/trgm")
     def audit() = Retrieval.takedownAudit(spark, root)
       .as[(String, Long)].collect().toMap
     val full = audit()
